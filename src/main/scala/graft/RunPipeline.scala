@@ -67,8 +67,12 @@ object RunPipeline {
         Schemas.expression).map(Loaders.expression))
 
     val (associations, drugDisease) = DrugDisease.run(inputs)
-    Sources.writeParquet(associations, s"$outDir/associations")
-    Sources.writeJson(drugDisease, s"$outDir/drug_disease")
+    // both sinks read the cached associations frame; release it even when a
+    // write fails, so a long-lived session does not gain a cache entry per run
+    try {
+      Sources.writeParquet(associations, s"$outDir/associations")
+      Sources.writeJson(drugDisease, s"$outDir/drug_disease")
+    } finally associations.unpersist()
   }
 
   def main(args: Array[String]): Unit = {

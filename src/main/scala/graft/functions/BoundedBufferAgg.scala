@@ -21,8 +21,9 @@ package graft.functions
   * decision keyed on buffer boundedness — which Spark's conf cannot
   * express. The [[org.apache.spark.sql.graft.BoundedAggFallback]] physical
   * rule raises the threshold only for ObjectHashAggregateExec nodes whose
-  * every aggregate function is marked with this trait; everything else
-  * keeps Spark's spill-safe default.
+  * every aggregate function is marked with this trait (or is a
+  * declarative builtin with fixed-width buffer slots, such as `count`);
+  * everything else keeps Spark's spill-safe default.
   *
   * "Bounded" alone is not enough (r12 hardening): a sized Bloom buffer is
   * bounded by construction at up to 2^30 bits = 128 MB — 4M of those in

@@ -10,10 +10,14 @@ import org.apache.spark.sql.functions._
   * then fold Σ sᵢ / i² over 1-based rank i (sc:299-324). Source weighting:
   * literature pre-scaled ×0.2 before a 2-element re-rank (sc:325-337).
   *
-  * Expressed with native higher-order functions (codegen-visible, no UDF):
-  * slice∘sort_array for top-K, zip_with+sequence for ranks, aggregate for the
-  * fold. At 100 TB the collect_list is bounded by the top-K slice; the
-  * groupBy itself is a standard hash-agg shuffle on the association keys.
+  * The pipeline scores each source inside its aggregator
+  * (graft.functions.HarmonicTopKAgg: bounded top-K buffer, fold in
+  * `finish`), so no array column reaches a Project. [[harmonicFold]] stays
+  * for array inputs — `harmonicTopK` over a collected list, and the
+  * kernel benchmark's reference form — as native higher-order functions:
+  * zip_with+sequence for ranks, aggregate for the fold. The cross-source
+  * combine is closed form: a two-element fold needs no sort and no
+  * lambda, only greatest/least, which whole-stage codegen compiles.
   */
 object Scoring {
 
@@ -38,8 +42,18 @@ object Scoring {
     harmonicFold(topK(scores, k))
 
   /** Two-source combine (sc:325-337): literature weighted ×0.2, re-ranked
-    * against genetics, harmonic-folded again.
+    * against genetics, harmonic-folded again. Closed form of
+    * `harmonicFold(sort_array(array(g, 0.2·l), desc))`: the fold is
+    * `(0.0 + hi/1) + lo/4`, and greatest/least rank the pair with the
+    * descending sort's ordering (NaN largest; a ±0.0 tie sums to +0.0
+    * either way), so the result is the same double bit for bit.
+    * greatest/least skip nulls where the fold propagates them, hence the
+    * guard; it folds away for non-nullable inputs. Cheap enough that a
+    * threshold pushed below the Project may repeat it.
     */
-  def harmonicCombine(genetics: Column, literature: Column): Column =
-    harmonicFold(sort_array(array(genetics, literature * lit(0.2)), asc = false))
+  def harmonicCombine(genetics: Column, literature: Column): Column = {
+    val weighted = literature * lit(0.2)
+    when(genetics.isNotNull && literature.isNotNull,
+      (lit(0.0) + greatest(genetics, weighted)) + least(genetics, weighted) / lit(4.0))
+  }
 }

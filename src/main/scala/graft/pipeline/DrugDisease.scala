@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.HarmonicTopKAgg
 import graft.ops.{Graph, Scoring}
 
 /** The reference engine's full pipeline (SURVEY.md §3; sc:341-516),
@@ -49,8 +50,13 @@ object DrugDisease {
     * therapeutic areas, bundle-derived aggregates, hypotheses and the two
     * AE containment sub-scores.
     *
-    * Both outputs share one cached score plan — the reference recomputed
-    * the whole DAG for its second sink (SURVEY §3.2).
+    * The returned associations frame is cached: it is the one node with
+    * two consumers — the parquet sink writes it and the JSON projection
+    * reads it — so scoring, the dimension joins and the new-drug gate run
+    * once per execute, where the reference recomputed the whole DAG for
+    * its second sink (SURVEY §3.2). The bare score frame has a single
+    * consumer and is not cached. The caller unpersists the associations
+    * frame once both sinks have committed (RunPipeline.execute).
     */
   def run(in: Inputs): (DataFrame, DataFrame) = {
     // With expression data, the network keeps only tissue-co-active edges
@@ -78,7 +84,6 @@ object DrugDisease {
     val assoc = makeAssociations(
       propagated, Seq(col("target_id"), col("assoc_disease_id").as("disease_id")),
       threshold = if (whitelistMode) None else Some(0.1))
-      .cache()
 
     // The reference's two dimension frames (sc:427-428): disease dim ⟕
     // drug-bundle-per-disease, target dim ⟕ drug-bundle-per-target ⟕
@@ -111,6 +116,7 @@ object DrugDisease {
         .join(dfT, Seq("target_id"))
         .join(dfD, Seq("disease_id")),
       dropEmpty = !whitelistMode)
+      .cache()
     // The JSON sink projection (sc:478-494): names, therapeutic areas, the
     // bundle-derived disease AE profile (null-safe at both array levels —
     // the reference's unguarded flatten nulls the whole profile when ONE
@@ -229,10 +235,15 @@ object DrugDisease {
 
   /** Association scoring (sc:293-338): group by the association keys,
     * per-source top-100 harmonic folds, literature ×0.2 cross-source combine,
-    * threshold. graft.functions.TopKAgg bounds the aggregation buffer to K
-    * scores on the map side — the shuffle carries at most K doubles per
-    * (group, partition), where collect_list+slice would ship every evidence
-    * row before truncating.
+    * threshold. graft.functions.HarmonicTopKAgg bounds the aggregation
+    * buffer to K scores on the map side — the shuffle carries at most K
+    * doubles per (group, partition), where collect_list+slice would ship
+    * every evidence row before truncating — and folds in its `finish`, so
+    * the per-source scores leave the node as attributes. The threshold is
+    * pushed below the combine's Project with the combine inlined; that
+    * repeats only the closed-form greatest/least arithmetic. With `count`
+    * beside the two bounded aggregators the node keeps hash mode
+    * (BoundedAggFallback).
     *
     * Input needs columns: keys..., evs_id, genetics, europepmc.
     */
@@ -242,15 +253,12 @@ object DrugDisease {
       .groupBy(keys: _*)
       .agg(
         count(col("evs_id")).as("evidence_count"),
-        graft.functions.TopKAgg.topK(col("genetics"), 100).as("genetics_topk"),
-        graft.functions.TopKAgg.topK(col("europepmc"), 100).as("literature_topk"))
-      .withColumn("harmonic_genetics", Scoring.harmonicFold(col("genetics_topk")))
-      // the reference names the europepmc-sourced fold "literature"
-      // (sc:298, 312) — the sink schema carries harmonic_literature
-      .withColumn("harmonic_literature", Scoring.harmonicFold(col("literature_topk")))
+        HarmonicTopKAgg.harmonicTopK(col("genetics"), 100).as("harmonic_genetics"),
+        // the reference names the europepmc-sourced fold "literature"
+        // (sc:298, 312) — the sink schema carries harmonic_literature
+        HarmonicTopKAgg.harmonicTopK(col("europepmc"), 100).as("harmonic_literature"))
       .withColumn("harmonic",
         Scoring.harmonicCombine(col("harmonic_genetics"), col("harmonic_literature")))
-      .drop("genetics_topk", "literature_topk")
     // None = whitelist mode: the reference keeps every association (sc:441-445).
     threshold.fold(scored)(t => scored.where(col("harmonic") > t))
   }

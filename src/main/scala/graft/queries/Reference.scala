@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{MinKDistinctAgg, TopKAgg}
+import graft.functions.{HarmonicTopKAgg, MinKDistinctAgg}
 import graft.ops.{Core, Graph, Scoring}
 
 /** Reference-pipeline semantics (SURVEY.md §2.4-2.8, §3) re-expressed over
@@ -18,12 +18,13 @@ object Reference {
     // THE flagship: the reference's association scoring (sc:293-338,433-437)
     // — per-evidence source scores (pivot+fill-0 shape), groupBy association
     // keys, per-source top-100 harmonic folds, weighted cross-source combine
-    // (literature ×0.2, re-ranked), threshold filter. The bounded TopKAgg
-    // keeps at most 100 scores in the map-side buffer, so the association
-    // shuffle carries K doubles per (group, partition) — not every evidence
-    // row (collect_list+slice would truncate only AFTER the exchange).
+    // (literature ×0.2, re-ranked), threshold filter. The bounded
+    // HarmonicTopKAgg keeps at most 100 scores in the map-side buffer and
+    // folds them in its finish, so the association shuffle carries K
+    // doubles per (group, partition) — not every evidence row
+    // (collect_list+slice would truncate only AFTER the exchange).
     "q_ref_associations" -> ((s, d) => {
-      // spread: the broadcast join + the two TopKAgg-100 partial aggs all
+      // spread: the broadcast join + the two top-100 partial aggs all
       // run in the fact scan's single task on the fixture layout
       // (Core.spread doc; no-op on wide inputs; probe refspread ~1.25×)
       val li = Core.spread(table(s, d, "lineitem"))
@@ -40,17 +41,9 @@ object Reference {
       evs.groupBy(col("target_id"), col("disease_id"))
         .agg(
           count(lit(1)).as("evidence_count"),
-          TopKAgg.topK(col("genetics"), 100).as("g_topk"),
-          TopKAgg.topK(col("europepmc"), 100).as("l_topk")
+          HarmonicTopKAgg.harmonicTopK(col("genetics"), 100).as("g_h"),
+          HarmonicTopKAgg.harmonicTopK(col("europepmc"), 100).as("l_h")
         )
-        // Hoist the per-source folds to attributes BEFORE the combine:
-        // harmonicCombine references each argument ~3x (array + guard +
-        // fold), and Catalyst re-evaluates repeated non-attribute
-        // subexpressions — inlined, each interpreted fold ran 6x per row.
-        .select(
-          col("target_id"), col("disease_id"), col("evidence_count"),
-          Scoring.harmonicFold(col("g_topk")).as("g_h"),
-          Scoring.harmonicFold(col("l_topk")).as("l_h"))
         .select(
           col("target_id"), col("disease_id"), col("evidence_count"),
           round(Scoring.harmonicCombine(col("g_h"), col("l_h")), 6)
@@ -101,14 +94,8 @@ object Reference {
         .groupBy(col("target_id"), col("whitelist_id"))
         .agg(
           count(lit(1)).as("evidence_count"),
-          TopKAgg.topK(col("genetics"), 100).as("g_topk"),
-          TopKAgg.topK(col("europepmc"), 100).as("l_topk"))
-        // Same fold-hoist as q_ref_associations: attributes, not inlined
-        // fold trees, feed the combine (Catalyst duplicates the latter).
-        .select(
-          col("target_id"), col("whitelist_id"), col("evidence_count"),
-          Scoring.harmonicFold(col("g_topk")).as("g_h"),
-          Scoring.harmonicFold(col("l_topk")).as("l_h"))
+          HarmonicTopKAgg.harmonicTopK(col("genetics"), 100).as("g_h"),
+          HarmonicTopKAgg.harmonicTopK(col("europepmc"), 100).as("l_h"))
         .select(
           col("target_id"), col("whitelist_id"), col("evidence_count"),
           round(Scoring.harmonicCombine(col("g_h"), col("l_h")), 6)

@@ -3,7 +3,8 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, MutableProjection, NamedExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectAggregationIterator, ObjectHashAggregateExec, ScalaAggregator}
@@ -35,9 +36,11 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * (one ObjectAggregationIterator per partition; see Spark's
   * sql/core ObjectHashAggregateExec.scala) but with the threshold pinned
   * high — exactly where every aggregate buffer in the node is marked
-  * [[graft.functions.BoundedBufferAgg]]. Distribution, partitioning and
-  * output are inherited unchanged from [[BaseAggregateExec]], so the swap
-  * is invisible to AQE stage planning and exchange reuse.
+  * [[graft.functions.BoundedBufferAgg]] or is a fixed-width declarative
+  * builtin (`count` beside the top-K aggregators). Distribution,
+  * partitioning and output are inherited unchanged from
+  * [[BaseAggregateExec]], so the swap is invisible to AQE stage planning
+  * and exchange reuse.
   */
 case class BoundedObjectHashAggregateExec(
     requiredChildDistributionExpressions: Option[Seq[Expression]],
@@ -132,8 +135,11 @@ object BoundedAggFallback extends Rule[SparkPlan] {
     */
   val HeapBudgetBytes: Long = 1L << 30
 
-  /** Per-buffer byte bound when every agg in the node is marked bounded;
-    * None as soon as one isn't.
+  /** Byte bound of one aggregate's buffer, or None when it is unbounded.
+    * A declarative builtin (count, or sum/min/max over primitives) is
+    * bounded when every buffer attribute is fixed-width: it lives in the
+    * node's shared buffer row, 8 bytes a slot. `first(string)` carries a
+    * variable-width slot and stays unbounded.
     */
   private def boundedBytes(ae: AggregateExpression): Option[Long] =
     ae.aggregateFunction match {
@@ -142,6 +148,9 @@ object BoundedAggFallback extends Rule[SparkPlan] {
           case b: graft.functions.BoundedBufferAgg => Some(b.maxBufferBytes)
           case _ => None
         }
+      case d: DeclarativeAggregate
+          if d.aggBufferAttributes.forall(a => UnsafeRow.isFixedLength(a.dataType)) =>
+        Some(8L * d.aggBufferAttributes.length)
       case _ => None
     }
 

@@ -60,6 +60,35 @@ class BoundedAggFallbackSpec extends SparkSpec {
     assert(row._2 == 10)
   }
 
+  test("count beside a bounded udaf keeps the node bounded: fixed-width " +
+    "declarative buffers count at 8 bytes a slot") {
+    val df = wide.groupBy($"g")
+      .agg(count($"s").as("n"), TopKAgg.topK($"s", 3).as("t"))
+    val plan = planOf(df)
+    assert(plan.contains("BoundedObjectHashAggregate"), plan)
+    assert(stockObjectHashLines(plan).isEmpty, plan)
+    val row = df.where($"g" === 7).select($"n", $"t")
+      .as[(Long, Seq[Double])].head()
+    assert(row == ((10L, Seq(3607.0, 3207.0, 2807.0))))
+  }
+
+  test("first(string) beside a bounded udaf stays stock: a variable-width " +
+    "buffer slot has no byte bound") {
+    val df = wide.withColumn("name", $"s".cast("string")).groupBy($"g")
+      .agg(first($"name").as("f"), TopKAgg.topK($"s", 3).as("t"))
+    val plan = planOf(df)
+    assert(!plan.contains("BoundedObjectHashAggregate"), plan)
+    assert(stockObjectHashLines(plan).nonEmpty, plan)
+  }
+
+  test("count beside an unbounded collect_set stays stock") {
+    val df = wide.groupBy($"g")
+      .agg(count($"s").as("n"), collect_set($"s").as("vs"))
+    val plan = planOf(df)
+    assert(!plan.contains("BoundedObjectHashAggregate"), plan)
+    assert(stockObjectHashLines(plan).nonEmpty, plan)
+  }
+
   test("a GROUPED wide-bloom agg stays on the stock spill-safe exec: " +
     "bounded-by-construction but 128 MB per buffer fails the byte budget") {
     // 2^30-bit bloom: maxBufferBytes ~128 MB -> derived threshold 8 < 128

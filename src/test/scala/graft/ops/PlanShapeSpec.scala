@@ -555,4 +555,41 @@ class PlanShapeSpec extends SparkSpec {
     assert(bad.isEmpty,
       s"partition-less Window over an unbounded scan in:\n${bad.mkString("\n")}")
   }
+
+  test("makeAssociations scores inside the aggregator: no interpreted fold " +
+    "anywhere in the executed plan, and the final aggregate keeps hash mode") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.graft.BoundedObjectHashAggregateExec
+    // > 128 keys per partition: past the stock exec's sort fallback
+    val evs = (0 until 3000).map(i =>
+      (s"T${i % 700}", s"D${i % 3}", s"e$i", (i % 97) / 97.0, (i % 89) / 89.0))
+      .toDF("target_id", "disease_id", "evs_id", "genetics", "europepmc")
+    val assoc = graft.pipeline.DrugDisease.makeAssociations(
+      evs, Seq(col("target_id"), col("disease_id")))
+    // collect runs this Dataset's own plan and finalizes its adaptive plan
+    assert(assoc.collect().nonEmpty)
+    // walk the FINAL adaptive plan, into its query stages (planChildren
+    // reads an adaptive node's initial plan, before the stage-prep rules)
+    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        nodes(a.executedPlan)
+      case o => o +: planChildren(o).flatMap(nodes)
+    }
+    val all = nodes(assoc.queryExecution.executedPlan)
+    val folds = all.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: ArrayAggregate | _: ZipWith) => e
+    }))
+    assert(folds.isEmpty, assoc.queryExecution.executedPlan)
+    val finals = all.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.mode == Final) => a
+    }
+    assert(finals.nonEmpty, assoc.queryExecution.executedPlan)
+    assert(finals.forall(_.isInstanceOf[BoundedObjectHashAggregateExec]),
+      assoc.queryExecution.executedPlan)
+  }
 }

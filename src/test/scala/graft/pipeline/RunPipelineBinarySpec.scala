@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{RunPipeline, SparkSpec}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -10,47 +11,10 @@ import java.nio.file.Files
   */
 class RunPipelineBinarySpec extends SparkSpec {
   import spark.implicits._
-
-  private def writeWorld(): String = {
-    val dir = Files.createTempDirectory("graft-runpipeline").toString
-    def put(name: String, lines: String*): Unit =
-      Files.writeString(java.nio.file.Paths.get(s"$dir/$name.json"),
-        lines.mkString("\n"))
-    put("drugs",
-      """{"id":"d1","pref_name":"DrugOne","max_clinical_trial_phase":4,"number_of_mechanisms_of_action":1,"indications":[{"efo_id":"D1"}],"mechanisms_of_action":[{"target_components":[{"ensembl":"T9"}]}]}""",
-      """{"id":"d2","pref_name":"DrugTwo","max_clinical_trial_phase":3,"number_of_mechanisms_of_action":1,"indications":[],"mechanisms_of_action":[{"target_components":[{"ensembl":"T2"},{"ensembl":"T1"}]}]}""")
-    put("targets",
-      """{"id":"T1","approved_symbol":"G1","uniprot_accessions":["P1"],"go":[]}""",
-      """{"id":"T2","approved_symbol":"G2","uniprot_accessions":["P2"],"go":[]}""")
-    put("diseases",
-      """{"code":"http://purl.obolibrary.org/obo/D1","label":"disease one","path_codes":[["D1"]],"therapeutic_codes":["TA1"]}""")
-    put("evidences",
-      """{"id":"e1","sourceID":"europepmc","disease":{"id":"D1"},"target":{"id":"T1"},"scores":{"association_score":0.9}}""")
-    put("interactions",
-      """{"interactorA_uniprot_name":"P1","interactorB_uniprot_name":"P2","mi_score":0.9,"source_databases":["intact"]}""")
-    put("faers_by_drug",
-      """{"chembl_id":"d1","event":"nausea","count":10,"llr":2.0,"critval":1.0}""",
-      """{"chembl_id":"d2","event":"nausea","count":5,"llr":2.0,"critval":1.0}""",
-      """{"chembl_id":"d2","event":"rash","count":2,"llr":2.0,"critval":1.0}""")
-    put("faers_by_target",
-      """{"target_id":"T9","event":"headache","report_count":1,"llr":2.0,"critval":1.0}""")
-    put("aggregations",
-      """{"disease_id":"D1","drug_id":"d1","associated_diseases":[],"associated_targets":[]}""")
-    put("whitelist", """{"whitelist_id":"W1","whitelist":["D1"]}""")
-    // genetics side: studies/predictions are parquet in the reference (sc:205-209)
-    Seq(("S1", "trait one", Seq("D1"), "measurement"))
-      .toDF("study_id", "trait_reported", "trait_efos", "trait_category")
-      .write.mode("overwrite").parquet(s"$dir/studies.parquet")
-    Seq(
-      ("S1", "1", 100L, "A", "G", 0.8, "T1"),
-      ("S1", "1", 200L, "A", "G", 0.7, "T1")
-    ).toDF("study_id", "chrom", "pos", "ref", "alt", "y_proba_all_features", "gene_id")
-      .write.mode("overwrite").parquet(s"$dir/predictions.parquet")
-    dir
-  }
+  import RunPipelineBinarySpec.writeWorld
 
   test("open mode: binary writes associations parquet and drug_disease JSON") {
-    val in = writeWorld()
+    val in = writeWorld(spark)
     val out = Files.createTempDirectory("graft-out").toString
     RunPipeline.execute(spark, in, out, whitelistPath = None)
 
@@ -92,7 +56,7 @@ class RunPipelineBinarySpec extends SparkSpec {
   }
 
   test("whitelist mode: optional source switches keying; sinks still materialize") {
-    val in = writeWorld()
+    val in = writeWorld(spark)
     val out = Files.createTempDirectory("graft-out-wl").toString
     RunPipeline.execute(spark, in, out, whitelistPath = Some(s"$in/whitelist.json"))
 
@@ -107,5 +71,50 @@ class RunPipelineBinarySpec extends SparkSpec {
       .as[(String, String, String, Double)].collect().toSet
     // member disease D1 recovered from W1; both propagated targets score
     assert(scored == Set(("D1", "T1", "d2", 0.8), ("D1", "T2", "d2", 0.8)))
+  }
+}
+
+object RunPipelineBinarySpec {
+
+  /** A one-disease world on disk in RunPipeline's input layout; returns
+    * the input directory.
+    */
+  def writeWorld(spark: SparkSession): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-runpipeline").toString
+    def put(name: String, lines: String*): Unit =
+      Files.writeString(java.nio.file.Paths.get(s"$dir/$name.json"),
+        lines.mkString("\n"))
+    put("drugs",
+      """{"id":"d1","pref_name":"DrugOne","max_clinical_trial_phase":4,"number_of_mechanisms_of_action":1,"indications":[{"efo_id":"D1"}],"mechanisms_of_action":[{"target_components":[{"ensembl":"T9"}]}]}""",
+      """{"id":"d2","pref_name":"DrugTwo","max_clinical_trial_phase":3,"number_of_mechanisms_of_action":1,"indications":[],"mechanisms_of_action":[{"target_components":[{"ensembl":"T2"},{"ensembl":"T1"}]}]}""")
+    put("targets",
+      """{"id":"T1","approved_symbol":"G1","uniprot_accessions":["P1"],"go":[]}""",
+      """{"id":"T2","approved_symbol":"G2","uniprot_accessions":["P2"],"go":[]}""")
+    put("diseases",
+      """{"code":"http://purl.obolibrary.org/obo/D1","label":"disease one","path_codes":[["D1"]],"therapeutic_codes":["TA1"]}""")
+    put("evidences",
+      """{"id":"e1","sourceID":"europepmc","disease":{"id":"D1"},"target":{"id":"T1"},"scores":{"association_score":0.9}}""")
+    put("interactions",
+      """{"interactorA_uniprot_name":"P1","interactorB_uniprot_name":"P2","mi_score":0.9,"source_databases":["intact"]}""")
+    put("faers_by_drug",
+      """{"chembl_id":"d1","event":"nausea","count":10,"llr":2.0,"critval":1.0}""",
+      """{"chembl_id":"d2","event":"nausea","count":5,"llr":2.0,"critval":1.0}""",
+      """{"chembl_id":"d2","event":"rash","count":2,"llr":2.0,"critval":1.0}""")
+    put("faers_by_target",
+      """{"target_id":"T9","event":"headache","report_count":1,"llr":2.0,"critval":1.0}""")
+    put("aggregations",
+      """{"disease_id":"D1","drug_id":"d1","associated_diseases":[],"associated_targets":[]}""")
+    put("whitelist", """{"whitelist_id":"W1","whitelist":["D1"]}""")
+    // genetics side: studies/predictions are parquet in the reference (sc:205-209)
+    Seq(("S1", "trait one", Seq("D1"), "measurement"))
+      .toDF("study_id", "trait_reported", "trait_efos", "trait_category")
+      .write.mode("overwrite").parquet(s"$dir/studies.parquet")
+    Seq(
+      ("S1", "1", 100L, "A", "G", 0.8, "T1"),
+      ("S1", "1", 200L, "A", "G", 0.7, "T1")
+    ).toDF("study_id", "chrom", "pos", "ref", "alt", "y_proba_all_features", "gene_id")
+      .write.mode("overwrite").parquet(s"$dir/predictions.parquet")
+    dir
   }
 }

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import graft.SparkSpec
+import graft.{RunPipeline, SparkSpec}
 import graft.sources.Loaders
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Raw-input → loaders → full DrugDisease.run, both pipeline modes — the
   * complete reference-equivalent path (sc:341-516) on one literal world.
@@ -134,5 +135,33 @@ class RunPipelineSpec extends SparkSpec {
       inputs.copy(evidences = evs, whitelist = Some(wl)))
     val diseases = scored.select(col("disease_id")).distinct().as[String].collect().toSet
     assert(diseases == Set("D1")) // D2 dropped null-safely, not crashed
+  }
+
+  test("run caches exactly the decorated associations frame, which both " +
+    "sinks read") {
+    // suites share one session; start from an empty cache
+    spark.catalog.clearCache()
+    val (assoc, scored) = DrugDisease.run(inputs)
+    assert(assoc.storageLevel != StorageLevel.NONE)
+    // the JSON projection reads the cached node instead of re-planning it
+    val reads = scored.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }
+    assert(reads.nonEmpty, scored.queryExecution.withCachedData)
+    assoc.unpersist()
+    // ... and it was the only entry run added (the bare score frame is not
+    // cached)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("execute leaves no cache entry behind in either mode") {
+    spark.catalog.clearCache()
+    val in = RunPipelineBinarySpec.writeWorld(spark)
+    val out = java.nio.file.Files.createTempDirectory("graft-out-cache").toString
+    RunPipeline.execute(spark, in, s"$out/open", whitelistPath = None)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    RunPipeline.execute(spark, in, s"$out/wl",
+      whitelistPath = Some(s"$in/whitelist.json"))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }
