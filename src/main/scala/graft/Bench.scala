@@ -1,24 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC pins the TimestampNTZ→Timestamp cast in Core.table: without it a
-      // non-UTC machine would bench different plans/values than Verify/tests.
-      .config("spark.sql.session.timeZone", "UTC")
-      // object-agg sort fallback stays at Spark's spill-safe default;
-      // bounded-buffer udafs get hash mode per-operator via the
-      // BoundedAggFallback query-stage prep rule (GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start("WARN")
     // Untimed warmup: session/codegen/scheduler init otherwise lands on
     // whichever query happens to run first.
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence trail (plans/rN/<query>_{before,after}.txt).
   * Run: `runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>`.
-  * Session config matches Bench so the dumped plan is the benched plan.
+  * The session is Bench's (graft.Session), so at the same
+  * SPARK_GRAFT_CPUS the dumped plan is the benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
       try {

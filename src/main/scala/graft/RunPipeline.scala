@@ -78,20 +78,7 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: RunPipeline <inputDir> <outputDir> [whitelistJson]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // object-agg sort fallback stays at Spark's spill-safe default;
-      // bounded-buffer udafs get hash mode per-operator via the
-      // BoundedAggFallback query-stage prep rule (GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start("WARN")
     try execute(spark, args(0), args(1), args.lift(2))
     finally spark.stop()
   }

@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.RunMetrics
 
 /** Local smoke runner: replicates the driver's entry() check (rows > 0 on
-  * sf0.001) and optionally runs one named query: `runMain graft.Smoke [name [sfDir]]`.
+  * sf0.001) and optionally runs comma-separated named queries:
+  * `runMain graft.Smoke [name,... [sfDir [runs]]]`. Each run prints its
+  * wall, job, task, task-second, shuffle-write and spill counts.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // object-agg sort fallback stays at Spark's spill-safe default;
-      // bounded-buffer udafs get hash mode per-operator via the
-      // BoundedAggFallback query-stage prep rule (GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start("ERROR")
     args.headOption match {
       case None =>
         val df = SparkEntry.entry(spark)
@@ -36,6 +25,8 @@ object Smoke {
         val unknown = queries.toSet -- SparkEntry.queries.keySet
         require(unknown.isEmpty,
           s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+        def mb(bytes: Long) = String.format(java.util.Locale.ROOT, "%.2f",
+          Double.box(bytes / 1048576.0))
         queries.foreach { name =>
           // construct INSIDE the timing loop: for lazy queries that's plan
           // building (microseconds); for eager ones (corpus_prepare's
@@ -49,13 +40,23 @@ object Smoke {
           // measured 0.65 s "at sf10" that way; the digests never ran)
           val noop = sys.env.get("SPARK_GRAFT_SMOKE_NOOP").contains("1")
           for (run <- 1 to args.lift(2).map(_.toInt).getOrElse(1)) {
-            val t0 = System.nanoTime()
-            df = SparkEntry.queries(name)(spark, sfDir)
-            val n =
-              if (noop) {
-                df.write.mode("overwrite").format("noop").save(); -1L
-              } else df.count()
-            println(s"QUERY=$name RUN=$run ROWS=$n SEC=${(System.nanoTime() - t0) / 1e9}")
+            // counters ride on the run's own jobs: JOBS (driver-scheduled
+            // actions), TASKS and TASKSEC (summed executor run time) tell a
+            // driver-bound run (many jobs, little task time) from a
+            // compute-bound one; SHW and SPILL are MB. SEC stays the
+            // body's wall, without the listener-bus drain.
+            val ((n, sec), m) = RunMetrics.measure(spark) {
+              val t0 = System.nanoTime()
+              df = SparkEntry.queries(name)(spark, sfDir)
+              val n =
+                if (noop) {
+                  df.write.mode("overwrite").format("noop").save(); -1L
+                } else df.count()
+              (n, (System.nanoTime() - t0) / 1e9)
+            }
+            println(s"QUERY=$name RUN=$run ROWS=$n SEC=$sec JOBS=${m.jobs} " +
+              s"TASKS=${m.tasks} TASKSEC=${m.taskSeconds} " +
+              s"SHW=${mb(m.shuffleWriteBytes)} SPILL=${mb(m.spillBytes)}")
           }
           // cached frames from one query must not distort the next (same
           // lesson as Bench); single-query runs keep the full plan dump

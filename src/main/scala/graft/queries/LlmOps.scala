@@ -30,80 +30,6 @@ object LlmOps {
 
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to")
 
-  /** Named stage frames of q_text_passage_dfcap, exposed so graft.Probe
-    * can attribute its wall clock stage by stage. The r12 split CLEARED
-    * the r11 "superlinear at 1000×" weak: same-session, every stage grows
-    * 10-11× on 10× data whose own passage count grows 11.5× — the 21-31×
-    * figure was a cross-session protocol confound (SCALE.md r12). The
-    * registered query is exactly `passageDfcapPlan(s, d).topk` — one
-    * builder, no drift between what's probed and what ships.
-    */
-  private[graft] case class PassageDfcapPlan(
-      passages: DataFrame, tf: DataFrame, df: DataFrame, dl: DataFrame,
-      nl: DataFrame, qdf: DataFrame, scored: DataFrame, topk: DataFrame)
-
-  private[graft] def passageDfcapPlan(s: SparkSession, d: String): PassageDfcapPlan = {
-    import org.apache.spark.sql.expressions.Window
-    val stride = 192
-    val sz = 256
-    // spread: every branch below re-splits ptext into trigrams — the
-    // fixture scan is one task (Core.spread doc; no-op on wide inputs)
-    val docs = Core.spread(table(s, d, "documents"))
-    val passages = docs.where(col("n_chars") > 0)
-      .withColumn("k", explode(sequence(lit(0L),
-        expr(s"(n_chars + ${stride - 1}) div $stride") - 1)))
-      .select(col("doc_id"), col("k").as("chunk_id"),
-        col("text").substr((col("k") * stride + 1).cast("int"), lit(sz))
-          .as("ptext"))
-    val tf = passages
-      .select(col("doc_id"), col("chunk_id"),
-        explode(TextOps.shingles(col("ptext"), 3)).as("w"))
-      .groupBy(col("doc_id"), col("chunk_id"), col("w"))
-      // CACHED — the opposite call from q_text_bm25_dfcap, both measured
-      // at sf10: dropping bm25's doc-level tf cache won at every scale
-      // (ReuseExchange covers it; fill cost only), but the PASSAGE tf is
-      // ~3× taller (chunk explosion) and its recompute across the df
-      // branch and the candidate join is NOT fully reused at sf10 —
-      // uncached measured 52-58 s vs 25-37 s cached (sf0.1 prefers
-      // uncached by ~0.9 s; the 100× behavior wins the call)
-      .agg(count(lit(1)).as("tf")).cache()
-    val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val dl = passages.select(col("doc_id"), col("chunk_id"),
-      size(TextOps.shingles(col("ptext"), 3)).cast("long").as("dl"))
-    val nl = passages
-      .select(size(TextOps.shingles(col("ptext"), 3)).cast("long").as("tl"))
-      .agg(count(lit(1)).as("nn"), sum(col("tl")).as("ll"))
-    val qterms = docs
-      .where(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
-      .select(col("doc_id").as("query_id"),
-        explode(array_distinct(slice(TextOps.shingles(col("text"), 3), 1, 5)))
-          .as("w"))
-    val qdf = qterms.join(df, Seq("w"))
-      .crossJoin(broadcast(nl.select(col("nn").as("nn_cap"))))
-      .where(col("df") * 4 <= col("nn_cap"))
-      .select(col("query_id"), col("w"), col("df"))
-    val scored = tf.join(broadcast(qdf), Seq("w"))
-      .join(dl, Seq("doc_id", "chunk_id"))
-      .crossJoin(broadcast(nl))
-      .withColumn("score_t",
-        expr("((1000000 * (nn - df + 1)) div (df + 1)) * (tf * 2200)" +
-          " div (1000 * tf + 300 + (900 * dl * nn) div ll)"))
-      .groupBy(col("query_id"), col("doc_id"), col("chunk_id"))
-      .agg(sum(col("score_t")).as("score_fp"))
-    val wDoc = Window.partitionBy(col("query_id"), col("doc_id"))
-      .orderBy(col("score_fp").desc, col("chunk_id"))
-    val wQ = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_fp").desc, col("doc_id"))
-    val topk = scored
-      .withColumn("rd", row_number().over(wDoc))
-      .where(col("rd") === 1)
-      .withColumn("rn", row_number().over(wQ).cast("long"))
-      .where(col("rn") <= 3)
-      .select(col("query_id"), col("rn"), col("doc_id"),
-        col("chunk_id"), col("score_fp"))
-    PassageDfcapPlan(passages, tf, df, dl, nl, qdf, scored, topk)
-  }
-
   /** Marker-word profiles for the language-ID heuristic. */
   val LangProfiles: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "in"),
@@ -1467,9 +1393,68 @@ object LlmOps {
     // df·4 ≤ N_passages query-side guard. The word-token original keeps
     // the degenerate-vocab regime on the record; this is the plan whose
     // candidate volume is Σ_t df(t) (passage-df-bounded) at any corpus
-    // size. Body lives in passageDfcapPlan so graft.Probe can time each
-    // stage of the same plan the query ships.
-    "q_text_passage_dfcap" -> ((s, d) => passageDfcapPlan(s, d).topk),
+    // size. Per-stage timing at 10x data (SCALE.md r12): every stage
+    // grows 10-11x on data whose passage count grows 11.5x.
+    "q_text_passage_dfcap" -> ((s, d) => {
+      import org.apache.spark.sql.expressions.Window
+      val stride = 192
+      val sz = 256
+      // spread: every branch below re-splits ptext into trigrams — the
+      // fixture scan is one task (Core.spread doc; no-op on wide inputs)
+      val docs = Core.spread(table(s, d, "documents"))
+      val passages = docs.where(col("n_chars") > 0)
+        .withColumn("k", explode(sequence(lit(0L),
+          expr(s"(n_chars + ${stride - 1}) div $stride") - 1)))
+        .select(col("doc_id"), col("k").as("chunk_id"),
+          col("text").substr((col("k") * stride + 1).cast("int"), lit(sz))
+            .as("ptext"))
+      val tf = passages
+        .select(col("doc_id"), col("chunk_id"),
+          explode(TextOps.shingles(col("ptext"), 3)).as("w"))
+        .groupBy(col("doc_id"), col("chunk_id"), col("w"))
+        // CACHED — the opposite call from q_text_bm25_dfcap, both measured
+        // at sf10: dropping bm25's doc-level tf cache won at every scale
+        // (ReuseExchange covers it; fill cost only), but the PASSAGE tf is
+        // ~3× taller (chunk explosion) and its recompute across the df
+        // branch and the candidate join is NOT fully reused at sf10 —
+        // uncached measured 52-58 s vs 25-37 s cached (sf0.1 prefers
+        // uncached by ~0.9 s; the 100× behavior wins the call)
+        .agg(count(lit(1)).as("tf")).cache()
+      val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
+      val dl = passages.select(col("doc_id"), col("chunk_id"),
+        size(TextOps.shingles(col("ptext"), 3)).cast("long").as("dl"))
+      val nl = passages
+        .select(size(TextOps.shingles(col("ptext"), 3)).cast("long").as("tl"))
+        .agg(count(lit(1)).as("nn"), sum(col("tl")).as("ll"))
+      val qterms = docs
+        .where(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
+        .select(col("doc_id").as("query_id"),
+          explode(array_distinct(slice(TextOps.shingles(col("text"), 3), 1, 5)))
+            .as("w"))
+      val qdf = qterms.join(df, Seq("w"))
+        .crossJoin(broadcast(nl.select(col("nn").as("nn_cap"))))
+        .where(col("df") * 4 <= col("nn_cap"))
+        .select(col("query_id"), col("w"), col("df"))
+      val scored = tf.join(broadcast(qdf), Seq("w"))
+        .join(dl, Seq("doc_id", "chunk_id"))
+        .crossJoin(broadcast(nl))
+        .withColumn("score_t",
+          expr("((1000000 * (nn - df + 1)) div (df + 1)) * (tf * 2200)" +
+            " div (1000 * tf + 300 + (900 * dl * nn) div ll)"))
+        .groupBy(col("query_id"), col("doc_id"), col("chunk_id"))
+        .agg(sum(col("score_t")).as("score_fp"))
+      val wDoc = Window.partitionBy(col("query_id"), col("doc_id"))
+        .orderBy(col("score_fp").desc, col("chunk_id"))
+      val wQ = Window.partitionBy(col("query_id"))
+        .orderBy(col("score_fp").desc, col("doc_id"))
+      scored
+        .withColumn("rd", row_number().over(wDoc))
+        .where(col("rd") === 1)
+        .withColumn("rn", row_number().over(wQ).cast("long"))
+        .where(col("rn") <= 3)
+        .select(col("query_id"), col("rn"), col("doc_id"),
+          col("chunk_id"), col("score_fp"))
+    }),
 
     // TF-IDF keyword extraction: top-3 terms per doc by tf·idf with a
     // smoothed idf. tf is a map-side-partial hash agg on (doc, term); df

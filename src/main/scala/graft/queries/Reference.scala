@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{HarmonicTopKAgg, MinKDistinctAgg}
-import graft.ops.{Core, Graph, Scoring}
+import graft.functions.MinKDistinctAgg
+import graft.ops.{Core, Graph}
+import graft.pipeline.DrugDisease
 
 /** Reference-pipeline semantics (SURVEY.md §2.4-2.8, §3) re-expressed over
   * the TESTDATA star schema: lineitem/orders play evidences, supplier plays
@@ -18,7 +19,8 @@ object Reference {
     // THE flagship: the reference's association scoring (sc:293-338,433-437)
     // — per-evidence source scores (pivot+fill-0 shape), groupBy association
     // keys, per-source top-100 harmonic folds, weighted cross-source combine
-    // (literature ×0.2, re-ranked), threshold filter. The bounded
+    // (literature ×0.2, re-ranked), threshold filter — scored by the
+    // pipeline's own association node (refAssociations). The bounded
     // HarmonicTopKAgg keeps at most 100 scores in the map-side buffer and
     // folds them in its finish, so the association shuffle carries K
     // doubles per (group, partition) — not every evidence row
@@ -36,20 +38,11 @@ object Reference {
           when(col("l_returnflag") === "R", col("l_discount")).otherwise(lit(0.0))
             .as("genetics"),
           when(col("l_returnflag") =!= "R", col("l_discount")).otherwise(lit(0.0))
-            .as("europepmc")
+            .as("europepmc"),
+          // non-null: makeAssociations counts evidence rows as count(evs_id)
+          lit(1L).as("evs_id")
         )
-      evs.groupBy(col("target_id"), col("disease_id"))
-        .agg(
-          count(lit(1)).as("evidence_count"),
-          HarmonicTopKAgg.harmonicTopK(col("genetics"), 100).as("g_h"),
-          HarmonicTopKAgg.harmonicTopK(col("europepmc"), 100).as("l_h")
-        )
-        .select(
-          col("target_id"), col("disease_id"), col("evidence_count"),
-          round(Scoring.harmonicCombine(col("g_h"), col("l_h")), 6)
-            .as("harmonic")
-        )
-        .where(col("harmonic") > 0.1)
+      refAssociations(evs, "disease_id")
     }),
 
     // The composed second half of the reference pipeline (sc:478-509) over
@@ -84,23 +77,14 @@ object Reference {
           when(col("l_returnflag") === "R", col("l_discount")).otherwise(lit(0.0))
             .as("genetics"),
           when(col("l_returnflag") =!= "R", col("l_discount")).otherwise(lit(0.0))
-            .as("europepmc"))
+            .as("europepmc"),
+          lit(1L).as("evs_id"))
       // whitelist: urgent-ish priorities collapse into W1/W2 groups
       val wl = o.select(col("o_orderpriority").as("disease_id")).distinct()
         .where(substring(col("disease_id"), 1, 1).isin("1", "2", "3"))
         .select(col("disease_id"),
           concat(lit("W"), substring(col("disease_id"), 1, 1)).as("whitelist_id"))
-      evs.join(broadcast(wl), Seq("disease_id"))
-        .groupBy(col("target_id"), col("whitelist_id"))
-        .agg(
-          count(lit(1)).as("evidence_count"),
-          HarmonicTopKAgg.harmonicTopK(col("genetics"), 100).as("g_h"),
-          HarmonicTopKAgg.harmonicTopK(col("europepmc"), 100).as("l_h"))
-        .select(
-          col("target_id"), col("whitelist_id"), col("evidence_count"),
-          round(Scoring.harmonicCombine(col("g_h"), col("l_h")), 6)
-            .as("harmonic"))
-        .where(col("harmonic") > 0.1)
+      refAssociations(evs.join(broadcast(wl), Seq("disease_id")), "whitelist_id")
     }),
 
     // Custom whole-operator extension: backward AS-OF join (the classic
@@ -256,6 +240,19 @@ object Reference {
       )
     })
   )
+
+  /** Scoring of both reference-association queries: DrugDisease's
+    * association node keyed by (target_id, `key`), with the harmonic
+    * rounded to 6 places and thresholded on the ROUNDED value, as the
+    * DuckDB twins do (makeAssociations' own threshold filters the
+    * unrounded value and would keep rows in (0.1, 0.1000005)).
+    */
+  private def refAssociations(evs: DataFrame, key: String): DataFrame =
+    DrugDisease.makeAssociations(evs, Seq(col("target_id"), col(key)),
+      threshold = None)
+      .select(col("target_id"), col(key), col("evidence_count"),
+        round(col("harmonic"), 6).as("harmonic"))
+      .where(col("harmonic") > 0.1)
 
   val oracle: Map[String, String] = Map(
     "q_asof_join" ->
@@ -607,10 +604,9 @@ object Reference {
 
   /** The gated pipeline: identical chain with the front-side
     * pair-evidence gate applied (see ddPairs). Registered as
-    * q_pipeline_dd_gated (its own oracle) AND used by the Probe
-    * pipelinegate lever measurement at 1000×.
+    * q_pipeline_dd_gated (its own oracle).
     */
-  private[graft] def drugDiseasePipelineGated(
+  private def drugDiseasePipelineGated(
       s: SparkSession, d: String, minPairEvidence: Long): DataFrame =
     drugDiseasePipeline(s, d, minPairEvidence = Some(minPairEvidence))
 

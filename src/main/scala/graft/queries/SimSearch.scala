@@ -162,19 +162,12 @@ object SimSearch {
           .getField("cid").as("bucket"))
   }
 
-  /** Max-cosine centroid id over a broadcast centroid-struct array —
-    * the shared argmax kernel of the IVF assigns. `array_max` over
-    * (cos, cid) structs is order-free in the collect_list order and
-    * breaks cosine ties toward the HIGHER cid, matching the oracles'
-    * ORDER BY cos DESC, cid DESC. DotProduct keeps every dot codegen'd
-    * inside the lambda (r6 lesson: interpreted HOF folds cost 3-7×).
-    */
-  private def argmaxCid(cents: Column, v: Column, nrm: Column): Column =
-    argmaxStruct(cents, v, nrm).getField("cid")
-
-  /** The (cos, cid) max struct itself — callers that argmax over SEVERAL
-    * candidate arrays take `greatest` of the per-array maxima instead of
-    * concatenating the arrays first: max is associative, struct ordering
+  /** The max (cos, cid) struct over a broadcast centroid-struct array —
+    * the shared argmax kernel of the IVF assigns. Cosine ties break
+    * toward the HIGHER cid, matching the oracles' ORDER BY cos DESC,
+    * cid DESC. Callers that argmax over SEVERAL candidate arrays take
+    * `greatest` of the per-array maxima instead of concatenating the
+    * arrays first: max is associative, struct ordering
     * is the same lexicographic (cos, cid), and `greatest` skips a null
     * (empty-array) side — but the concat form deep-copies every
     * element's 64-double vector into a fresh row-local array (~90 KB per
@@ -211,7 +204,7 @@ object SimSearch {
     * size the same plan swaps to a shuffle join on the cell id, and the
     * coarse level recurses — each level is this method again.
     */
-  private[graft] def bucketAssignTwoLevel(e: DataFrame, nc: Int, n1: Int): DataFrame =
+  private def bucketAssignTwoLevel(e: DataFrame, nc: Int, n1: Int): DataFrame =
     assignTwoLevelAgainst(e,
       e.where(col("vec_id") < nc)
         .select(col("vec_id").as("cid"), col("v").as("cv"),
@@ -355,7 +348,7 @@ object SimSearch {
     * q_sim_ann_kmeans precedent). Training cost is sample-sized; the
     * corpus is only touched by the final assign the caller runs.
     */
-  private[graft] def trainCentroids(sample: DataFrame,
+  private def trainCentroids(sample: DataFrame,
       cents0: DataFrame): DataFrame = {
     // static assign here too (r12): cents0 is stand-in-sized, and the
     // sample-side assign gets the same primitive-loop kernel
@@ -425,7 +418,7 @@ object SimSearch {
     * E[|coarse|] = n1 ≈ √C. Training cost is sample-sized; the corpus is
     * touched once by the final broadcast-centroid assign.
     */
-  private[graft] def trainedAssign(e: DataFrame, occupancy: Long = 64): DataFrame =
+  private def trainedAssign(e: DataFrame, occupancy: Long = 64): DataFrame =
     // STATIC assign (r12): the trained frame is collected once into the
     // decoded broadcast index, so the old two-consumer cache is gone —
     // one action runs the sampled-Lloyd lineage. Measured same-session
@@ -436,8 +429,8 @@ object SimSearch {
     assignTwoLevelAgainstStatic(e, trainedCentroidFrame(e, e.count(), occupancy))
 
   /** The training half of trainedAssign — sample, stand-ins, one Lloyd
-    * round, coarse flags — exposed so Probe can time train vs the corpus
-    * assign separately. Returns (cid, cv, is_coarse), E[C] = max(32,
+    * round, coarse flags — its own method because other assigns and
+    * specs use the trained frame without the corpus assign. Returns (cid, cv, is_coarse), E[C] = max(32,
     * n/occupancy) rows. `occupancy` (default 64 — the registered/oracled
     * configuration) is the index-side recall/cost lever: fewer vectors
     * per cell ⇒ more cells ⇒ fewer candidates per probe.
@@ -734,7 +727,7 @@ object SimSearch {
     * localCheckpoint'd per round (never compose rounds lazily past two —
     * the two-star rule). Shared by the round-3 ladder gate.
     */
-  private[graft] def nndGraphAfter(s: SparkSession, d: String, k: Int,
+  private def nndGraphAfter(s: SparkSession, d: String, k: Int,
       rounds: Int,
       sharedIdx: Option[org.apache.spark.broadcast.Broadcast[
         org.apache.spark.sql.graft.CosIndex]] = None): DataFrame = {
@@ -769,6 +762,19 @@ object SimSearch {
         org.apache.spark.sql.graft.CosIndex]] =
     if (embeds(s, d).count() <= broadcastCeiling(s, d)) Some(cosIndex(s, d))
     else None
+
+  /** The tuned kNN graph (occupancy 128 + probe-2 + one NND round) behind
+    * q_sim_knn_graph_tuned and its recall gate, which passes its shared
+    * index as `idx` (ladderIdx doc).
+    */
+  private def tunedGraph(s: SparkSession, d: String,
+      idx: Option[org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.sql.graft.CosIndex]] = None): DataFrame = {
+    val K = 3
+    val assigned2 = trainedAssign(embeds(s, d), occupancy = 128)
+      .select(col("vec_id"), col("bucket"), col("bucket2")).cache()
+    nndRound(s, d, knnWithinBucketsProbe2(s, d, assigned2, K), K, -1L, idx)
+  }
 
   /** Driver-decoded broadcast image of the WHOLE normalized embedding
     * table — the brute-force-cosine index behind the truth sides of the
@@ -1444,24 +1450,14 @@ object SimSearch {
     // The shared default stays occ=64 because semdedup's pair stage
     // (Σ occ·n) doubles under occ=128; this query IS the kNN-family
     // default a user should reach for, with its own recall gate below.
-    "q_sim_knn_graph_tuned" -> ((s, d) => {
-      val K = 3
-      val assigned2 = trainedAssign(embeds(s, d), occupancy = 128)
-        .select(col("vec_id"), col("bucket"), col("bucket2")).cache()
-      nndRound(s, d, knnWithinBucketsProbe2(s, d, assigned2, K), K)
-    }),
+    "q_sim_knn_graph_tuned" -> ((s, d) => tunedGraph(s, d)),
 
     // Recall gate for the tuned configuration — the ladder's measured
     // optimum under the same exact-truth gate as every other point (one
     // shared index per query, ladderIdx doc).
     "q_sim_knn_recall_tuned" -> ((s, d) => {
       val idx = ladderIdx(s, d)
-      val K = 3
-      val assigned2 = trainedAssign(embeds(s, d), occupancy = 128)
-        .select(col("vec_id"), col("bucket"), col("bucket2")).cache()
-      val g = nndRound(s, d, knnWithinBucketsProbe2(s, d, assigned2, K), K,
-        -1L, idx)
-      recallGate(s, d, g, idx)
+      recallGate(s, d, tunedGraph(s, d, idx), idx)
     }),
 
     // Batch twin of Streams.ivfRouteStream — the streaming-ANN ingest

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Runtime shuffle observability: measure what a job ACTUALLY moved, not
@@ -16,18 +16,26 @@ import org.apache.spark.sql.SparkSession
   *
   * Test-harness quality gate, not a hot-path component: specs pin
   * operator shuffle volumes with it (RunMetricsSpec), the way
-  * PlanShapeSpec pins plan shapes.
+  * PlanShapeSpec pins plan shapes; graft.Smoke prints each run's job,
+  * task and task-second counts from it.
   */
 object RunMetrics {
 
-  /** Task-metric totals across every job that ran inside `measure`. */
+  /** Job count and task-metric totals across every job that ran inside
+    * `measure`.
+    */
   case class Snapshot(
       tasks: Long,
       shuffleWriteBytes: Long,
       shuffleWriteRecords: Long,
       shuffleReadRecords: Long,
       spillBytes: Long,
-      inputRecords: Long)
+      inputRecords: Long,
+      jobs: Long,
+      executorRunMs: Long) {
+    /** Executor task time summed over every task (not wall-clock). */
+    def taskSeconds: Double = executorRunMs / 1000.0
+  }
 
   private final class Fold extends SparkListener {
     val tasks = new LongAdder
@@ -36,6 +44,10 @@ object RunMetrics {
     val srRecords = new LongAdder
     val spill = new LongAdder
     val input = new LongAdder
+    val jobs = new LongAdder
+    val runMs = new LongAdder
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
 
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
@@ -46,11 +58,13 @@ object RunMetrics {
         srRecords.add(m.shuffleReadMetrics.recordsRead)
         spill.add(m.diskBytesSpilled + m.memoryBytesSpilled)
         input.add(m.inputMetrics.recordsRead)
+        runMs.add(m.executorRunTime)
       }
     }
 
     def snapshot: Snapshot = Snapshot(tasks.sum(), swBytes.sum(),
-      swRecords.sum(), srRecords.sum(), spill.sum(), input.sum())
+      swRecords.sum(), srRecords.sum(), spill.sum(), input.sum(), jobs.sum(),
+      runMs.sum())
   }
 
   /** Run `body`, return its result plus the fleet-wide task-metric totals

@@ -43,10 +43,6 @@ final class TwoLevelIndex(
     cellCvs: Array[Array[Array[Double]]],
     cellNrms: Array[Array[Double]]) extends Serializable {
 
-  def nCoarse: Int = coarseCids.length
-  def nCells: Int = cellKeys.length
-  def nFine: Long = cellCids.iterator.map(_.length.toLong).sum
-
   /** Winner index of the (cos, cid)-max over one centroid slice, −1 when
     * empty/all-excluded. Same FP order and tie-break as ArgmaxCos.
     */

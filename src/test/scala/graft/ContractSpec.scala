@@ -57,6 +57,22 @@ class ContractSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.contains("q_harmonic_topk"))
   }
 
+  test("only graft.Session builds a SparkSession") {
+    // every main and the test session start from graft.Session: a second
+    // hand-built session is how the mains' confs drifted apart before
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src")
+    val walk = java.nio.file.Files.walk(root)
+    val builders =
+      try walk.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .filter(p => "SparkSession\\.builder".r.findFirstIn(new String(
+          java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(root.relativize(_).toString).toSet
+      finally walk.close()
+    assert(builders == Set("main/scala/graft/Session.scala"), builders)
+  }
+
   test("SCALE.md holds no unfilled measurement placeholders") {
     // r9 shipped "[SF100_SEMDEDUP]"-style tokens where measured numbers
     // belonged, and the prose around them read as closed fixes — the

@@ -3,20 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for every suite (forked test JVM). */
+/** One shared local session for every suite (forked test JVM): the shared
+  * graft.Session settings, pinned to 4 cores whatever SPARK_GRAFT_CPUS
+  * says, with a throwaway warehouse dir.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Session.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    // object-agg sort fallback stays at Spark's spill-safe default;
-    // bounded-buffer udafs get hash mode per-operator via the
-    // BoundedAggFallback query-stage prep rule (GraftExtensions)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()

@@ -25,6 +25,20 @@ class RunMetricsSpec extends SparkSpec {
     assert(m.tasks > 0L, m)
   }
 
+  test("jobs count the actions run; task-seconds sum executor run time") {
+    // narrow plan (no exchange): each noop write is exactly one job of
+    // four tasks, and every task sleeps 2 × 10 ms inside the udf
+    val slow = udf((x: Long) => { Thread.sleep(10); x })
+    val df = spark.range(0, 8, 1, 4).select(slow(col("id")).as("id"))
+    val (_, m) = RunMetrics.measure(spark) {
+      (1 to 3).foreach(_ => df.write.mode("overwrite").format("noop").save())
+    }
+    assert(m.jobs == 3L, m)
+    assert(m.tasks == 12L, m)
+    assert(m.taskSeconds > 0.0, m)
+    assert(m.taskSeconds >= 0.2, m)
+  }
+
   test("a groupBy shuffles at most one record per group per map partition") {
     // map-side partial aggregation: the exchange carries partial states,
     // never the input rows — 10k rows over 7 groups must shuffle far
