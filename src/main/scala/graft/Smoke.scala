@@ -4,8 +4,9 @@ import org.apache.spark.sql.graft.RunMetrics
 
 /** Local smoke runner: replicates the driver's entry() check (rows > 0 on
   * sf0.001) and optionally runs comma-separated named queries:
-  * `runMain graft.Smoke [name,... [sfDir [runs]]]`. Each run prints its
-  * wall, job, task, task-second, shuffle-write and spill counts.
+  * `runMain graft.Smoke [name,... [sfDir [runs]]]`. Each run times a noop
+  * write and prints its wall, job, task, task-second, shuffle-write and
+  * spill counts; one untimed count() after the runs prints the rows.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
@@ -30,34 +31,30 @@ object Smoke {
         queries.foreach { name =>
           // construct INSIDE the timing loop: for lazy queries that's plan
           // building (microseconds); for eager ones (corpus_prepare's
-          // checkpointed components) construction IS the work and timing the
-          // final count alone would report a fantasy number
+          // checkpointed components) construction IS the work. The timed
+          // action is the Bench protocol's noop write, which materializes
+          // EVERY column: count() prunes unreferenced ones, so assign- and
+          // digest-style queries time as ~0 under it (merkle measured
+          // 0.65 s "at sf10" that way; the digests never ran)
           var df: org.apache.spark.sql.DataFrame = null
-          // SPARK_GRAFT_SMOKE_NOOP=1 → noop-write (materializes EVERY
-          // column, the Bench protocol) instead of count(): count prunes
-          // unreferenced aggregates, so digest/assign-style queries whose
-          // cost lives in pruned columns time as ~0 under count (merkle
-          // measured 0.65 s "at sf10" that way; the digests never ran)
-          val noop = sys.env.get("SPARK_GRAFT_SMOKE_NOOP").contains("1")
           for (run <- 1 to args.lift(2).map(_.toInt).getOrElse(1)) {
             // counters ride on the run's own jobs: JOBS (driver-scheduled
             // actions), TASKS and TASKSEC (summed executor run time) tell a
             // driver-bound run (many jobs, little task time) from a
             // compute-bound one; SHW and SPILL are MB. SEC stays the
             // body's wall, without the listener-bus drain.
-            val ((n, sec), m) = RunMetrics.measure(spark) {
+            val (sec, m) = RunMetrics.measure(spark) {
               val t0 = System.nanoTime()
               df = SparkEntry.queries(name)(spark, sfDir)
-              val n =
-                if (noop) {
-                  df.write.mode("overwrite").format("noop").save(); -1L
-                } else df.count()
-              (n, (System.nanoTime() - t0) / 1e9)
+              df.write.mode("overwrite").format("noop").save()
+              (System.nanoTime() - t0) / 1e9
             }
-            println(s"QUERY=$name RUN=$run ROWS=$n SEC=$sec JOBS=${m.jobs} " +
+            println(s"QUERY=$name RUN=$run SEC=$sec JOBS=${m.jobs} " +
               s"TASKS=${m.tasks} TASKSEC=${m.taskSeconds} " +
               s"SHW=${mb(m.shuffleWriteBytes)} SPILL=${mb(m.spillBytes)}")
           }
+          // the row count is one untimed action after the timed runs
+          println(s"QUERY=$name ROWS=${df.count()}")
           // cached frames from one query must not distort the next (same
           // lesson as Bench); single-query runs keep the full plan dump
           spark.catalog.clearCache()

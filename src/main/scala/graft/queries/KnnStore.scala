@@ -119,6 +119,7 @@ import graft.llm.Vectors
   * route it through `removeVectors` + `addArrivals`.
   */
 object KnnStore {
+  import SimSearch.{candidates, probedCells, topK}
 
   /** Id-shard count floor. The ACTUAL shard count is a per-store LAYOUT
     * property fixed at build time (≈ n/4096, floored here) and persisted
@@ -199,7 +200,7 @@ object KnnStore {
   /** Normalize + assign a (vec_id, v) frame against the static centroid
     * index: (vec_id, vn, bucket, bucket2), primary-assignable rows only
     * (bucket null ⇒ both probed cells empty ⇒ unindexable, the caller's
-    * novel path — same drop as knnWithinBucketsProbe2's member set).
+    * novel path — same drop as SimSearch.bucketTail's member set).
     */
   private def assignFrame(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val assign = SimSearch.staticAssignColumn(cents)
@@ -213,21 +214,7 @@ object KnnStore {
 
   private def postingsOf(assigned: DataFrame): DataFrame =
     assigned.select(col("vec_id"), col("vn"), col("bucket").as("home"),
-      explode(array_compact(array(col("bucket"), col("bucket2"))))
-        .as("pcell"))
-
-  /** Scored candidates of the probing side against a primary-member side:
-    * (vec_id, nbr, cos) — the probe-2 candidate relation restricted to
-    * whatever frames the caller passes.
-    */
-  private def scoreAgainst(probes: DataFrame, members: DataFrame,
-      cellCol: String): DataFrame =
-    members.as("y")
-      .join(probes.as("x"),
-        col(s"x.$cellCol") === col(s"y.$cellCol") &&
-          col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr"),
-        round(Vectors.dotFast(col("x.vn"), col("y.vn")), 6).as("cos"))
+      probedCells(col("bucket"), col("bucket2")).as("pcell"))
 
   /** One file per cell directory: partitionBy writes a file per (task ×
     * partition-value), so an unrepartitioned 32-task write into C=n/occ
@@ -356,18 +343,10 @@ object KnnStore {
     java.lang.Math.floorMod(h, shards)
   }
 
-  private def topK(edges: DataFrame, k: Int): DataFrame =
-    edges.groupBy(col("vec_id"))
-      .agg(graft.functions.TopKPairDistinctAgg
-        .topK(col("cos"), col("nbr"), k).as("t"))
-      .select(col("vec_id"), posexplode(col("t")))
-      .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col._2").as("nbr"), col("col._1").as("cos"))
-
   /** Build the store from scratch: members, postings, and the probe-2
-    * top-K graph (identical math to knnWithinBucketsProbe2 — the spec
-    * pins row-identity against q_sim_knn_graph_trained2 under the same
-    * centroid frame).
+    * top-K graph (the same candidates + topK kernel as SimSearch's
+    * bucketTail — the spec pins row-identity against
+    * q_sim_knn_graph_trained2 under the same centroid frame).
     */
   def build(s: SparkSession, corpus: DataFrame, cents: DataFrame,
       root: String, k: Int): Unit = {
@@ -390,8 +369,8 @@ object KnnStore {
     writePartitioned(postingsOf(members), "pcell", s"$root/postings")
     val probes = readPostings(s, root)
       .select(col("vec_id"), col("vn"), col("pcell").as("bucket"))
-    val graph = topK(scoreAgainst(probes,
-      members.select(col("vec_id"), col("vn"), col("bucket")), "bucket"), k)
+    val graph = topK(candidates(probes,
+      members.select(col("vec_id"), col("vn"), col("bucket"))), k)
     writePartitioned(
       graph.join(members.select(col("vec_id"), col("bucket")), Seq("vec_id")),
       "bucket", s"$root/graph")
@@ -451,10 +430,10 @@ object KnnStore {
     // arrival edges: candidates = primary members (stored ∪ in-batch) of
     // the arrival's probed cells — the stored member scan prunes to
     // exactly those partitions.
-    val aCands = scoreAgainst(broadcast(aProbes),
+    val aCands = candidates(broadcast(aProbes),
         readPart(s, s"$root/members", MembersSchema, "bucket", aCellSeq)
-          .select(col("vec_id"), col("vn"), col("bucket")), "bucket")
-      .union(scoreAgainst(aProbes, aMembers, "bucket"))
+          .select(col("vec_id"), col("vn"), col("bucket")))
+      .union(candidates(aProbes, aMembers))
     val arrivalEdges = topK(aCands, k)
 
     // members gaining the arrival: every stored vector PROBING an arrival
@@ -664,8 +643,7 @@ object KnnStore {
     def vIds = victims.select(col("vec_id").as("vec_id"))
     val vHomeSeq = litSeq(victims.select(col("home")))
     val vCellSeq = litSeq(victims
-      .select(explode(array_compact(array(col("home"), col("bucket2"))))
-        .as("cell")))
+      .select(probedCells(col("home"), col("bucket2")).as("cell")))
 
     // holders: probers of the victims' primary cells whose stored list
     // contains a victim (victims' own lists are dropped wholesale, so
@@ -695,16 +673,14 @@ object KnnStore {
         hHomeSeq)
       .join(broadcast(hIds), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("vn"),
-        explode(array_compact(array(col("bucket"), col("bucket2"))))
-          .as("bucket"))
+        probedCells(col("bucket"), col("bucket2")).as("bucket"))
       .cleanCkpt
     val hCellSeq = litSeq(hProbes.select(col("bucket")))
     val candMembers = readPart(s, s"$root/members", MembersSchema,
         "bucket", hCellSeq)
       .join(broadcast(vIds), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("vn"), col("bucket"))
-    val newLists = topK(scoreAgainst(broadcast(hProbes), candMembers,
-        "bucket"), k)
+    val newLists = topK(candidates(broadcast(hProbes), candMembers), k)
       .join(broadcast(holders.select(col("vec_id"),
         col("home").as("bucket"))), Seq("vec_id"))
       .cleanCkpt
@@ -837,8 +813,7 @@ object KnnStore {
         "addArrivals")
     val vHomeSeq = litSeq(victims.select(col("home")))
     val vCellSeq = litSeq(victims
-      .select(explode(array_compact(array(col("home"), col("bucket2"))))
-        .as("cell")))
+      .select(probedCells(col("home"), col("bucket2")).as("cell")))
 
     // the batch under its NEW assignment (unassignable rows drop out)
     val av = assignFrame(updated, cents).cleanCkpt
@@ -886,20 +861,19 @@ object KnnStore {
         hHomeSeq)
       .join(broadcast(hIds), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("vn"),
-        explode(array_compact(array(col("bucket"), col("bucket2"))))
-          .as("bucket"))
+        probedCells(col("bucket"), col("bucket2")).as("bucket"))
       .cleanCkpt
     val hCellSeq = litSeq(hProbes.select(col("bucket")))
-    val hLists = topK(scoreAgainst(broadcast(hProbes),
-        finalMembers(hCellSeq), "bucket"), k)
+    val hLists = topK(candidates(broadcast(hProbes),
+        finalMembers(hCellSeq)), k)
       .join(broadcast(holders.select(col("vec_id"),
         col("home").as("bucket"))), Seq("vec_id"))
       .cleanCkpt
 
     // fresh lists for the re-embedded rows (final members include the
     // in-batch co-arrivals of shared cells)
-    val aLists = topK(scoreAgainst(broadcast(aProbes),
-        finalMembers(aCellSeq), "bucket"), k)
+    val aLists = topK(candidates(broadcast(aProbes),
+        finalMembers(aCellSeq)), k)
       .join(av.select(col("vec_id"), col("bucket")), Seq("vec_id"))
       .cleanCkpt
 

@@ -475,148 +475,175 @@ object SimSearch {
     root
   }
 
-  /** Shared kNN-within-bucket tail: bucket self-join on ids only
-    * (hard-won rule: broadcast-able id re-fetch beats carrying vectors
-    * through the pair shuffle), exact cosine on candidates, per-vector
-    * top-k window over the bucket-pruned pair set.
-    *
-    * CACHE CONTRACT: `mvn` below (assign ⋈ normalized vectors — n rows ×
-    * ~65 columns) is cached because BOTH sides of the bucket self-join
-    * read it; the cache is released by the harness's
-    * `catalog.clearCache()` between queries (Bench/Smoke/Verify all do
-    * this), NOT by this function — the returned frame is lazy, so there
-    * is no safe point inside it to unpersist. An embedding user composing
-    * several kNN calls in one session must call
-    * `spark.catalog.clearCache()` (or track and unpersist) between them,
-    * or the caches accumulate at n-rows-of-vectors each.
+  /** A probe-2 frame's probed cells, one row each: the primary and the
+    * second cell, a null cell dropped (a null primary means both probed
+    * cells are empty; a null second cell means probe-1).
     */
-  private def knnWithinBuckets(s: SparkSession, d: String,
-      assigned: DataFrame, k: Int): DataFrame = {
-    // vn rides INTO the bucket self-join (the semdedup pair-stage shape,
-    // r10): the old ids-only self-join + two vector re-fetch joins
-    // sorted the PAIR-sized frame (occupancy·n ≈ 126M rows at 2M
-    // vectors) twice — the re-fetch rule ("broadcast-able id joins beat
-    // shuffle width") inverts once the vector table outgrows the
-    // broadcast threshold and the fetches become pair-sized SMJs
-    // (measured at sf100/2M: the old shape DISK-KILLED after 25 min of
-    // pair-sort spill; this one runs 112.8 s with zero spill errors,
-    // and the sf10 warm wall dropped 13.6 → 8.5 s — same-session A/B).
-    // Here the only sort is the two 1·n sides of the bucket
-    // SMJ; the scored pairs flow straight into TopKPairAgg's map-side
-    // combine (k pairs per vector per partition) and never shuffle as
-    // rows.
-    val mvn = assigned.join(normEmbeds(s, d), Seq("vec_id")).cache()
-    // per-vector top-k via the BOUNDED pair aggregator: the window form
-    // shuffles and SORTS every bucket-pruned scored pair per vector;
-    // TopKPairAgg map-side-combines. Output identical by the aggregator's
-    // (score DESC, id ASC) ≡ row_number contract (TopKPairAggSpec).
-    mvn.as("x")
-      .join(mvn.as("y"),
+  private[graft] def probedCells(primary: Column, second: Column): Column =
+    explode(array_compact(array(primary, second)))
+
+  /** The probe/member candidate relation with exact cosine: (vec_id, nbr,
+    * cos) for every member y of a cell that x probes, y ≠ x. Both frames
+    * carry (vec_id, vn, bucket) — on `probes` the probed cell, on
+    * `members` the primary cell — so a neighbour is matched at most once
+    * per probing vector (probed cells are distinct by construction). The
+    * kNN tail and every KnnStore build/maintenance fold score through
+    * this one join.
+    */
+  private[graft] def candidates(probes: DataFrame,
+      members: DataFrame): DataFrame =
+    probes.as("x")
+      .join(members.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr"),
         round(Vectors.dotFast(col("x.vn"), col("y.vn")), 6).as("cos"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKPairAgg.topK(col("cos"), col("nbr"), k).as("t"))
+
+  /** Per-vector top-k of scored pairs (vec_id, nbr, cos) → (vec_id, rank,
+    * nbr, cos) through the bounded TopKPairDistinctAgg: map-side combine
+    * (k pairs per vector per partition), never a shuffled or sorted pair
+    * relation, and (cos DESC, nbr ASC) ≡ row_number ranks. Repeated
+    * (vec_id, nbr) pairs collapse in the buffer (equal id ⇒ equal cosine,
+    * the aggregator's guarded contract); on a pair set unique per (vec_id,
+    * nbr) it equals TopKPairAgg.
+    */
+  private[graft] def topK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.groupBy(col("vec_id"))
+      .agg(graft.functions.TopKPairDistinctAgg
+        .topK(col("cos"), col("nbr"), k).as("t"))
       .select(col("vec_id"), posexplode(col("t")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col._2").as("nbr"), col("col._1").as("cos"))
+
+  /** The kNN-within-bucket tail over an assignment (vec_id, bucket,
+    * bucket2): each vector scans the primary members of its probed cells
+    * (nprobe=2 — the recall lever for vectors near a Voronoi boundary;
+    * probe-1 is bucket2 = null) and keeps its top-k by exact cosine.
+    *
+    * vn rides INTO the cell join (the semdedup pair-stage shape, r10): an
+    * ids-only join plus two vector re-fetch joins sorted the PAIR-sized
+    * frame (occupancy·n ≈ 126M rows at 2M vectors) twice — measured at
+    * sf100/2M that shape DISK-KILLED after 25 min of pair-sort spill,
+    * this one ran 112.8 s (sf10 warm 13.6 → 8.5 s, same-session A/B).
+    * The only sort is the two 1·n sides of the cell join; the scored pairs
+    * flow straight into topK's bounded aggregator and never shuffle as
+    * rows.
+    *
+    * CACHE CONTRACT: `mvn` (assign ⋈ normalized vectors — n rows × ~65
+    * columns) is cached because BOTH sides of the cell join read it; the
+    * harness's `catalog.clearCache()` between queries releases it, NOT
+    * this function — the returned frame is lazy, so there is no safe
+    * point inside it to unpersist. An embedding user composing several
+    * kNN calls in one session must call `spark.catalog.clearCache()`
+    * between them, or the caches accumulate at n-rows-of-vectors each.
+    */
+  private def bucketTail(s: SparkSession, d: String, assigned: DataFrame,
+      k: Int): DataFrame = {
+    val mvn = assigned.join(normEmbeds(s, d), Seq("vec_id")).cache()
+    topK(candidates(
+      mvn.select(col("vec_id"), col("vn"),
+        probedCells(col("bucket"), col("bucket2")).as("bucket")),
+      mvn.where(col("bucket").isNotNull)
+        .select(col("vec_id"), col("vn"), col("bucket"))), k)
   }
 
-  /** Probe-2 variant of the kNN tail: each vector's candidates come from
-    * BOTH its probed cells' members (IVF search's nprobe=2), not just the
-    * argmax cell — the standard recall lever for vectors near a Voronoi
-    * boundary, at ≈2× the pair work (each vector scans two cells; Σ pair
-    * cost stays occupancy-bounded). The index side stays the PRIMARY
-    * assignment, so a neighbour is matched at most once (probed buckets
-    * are distinct by construction). Same cache contract as
-    * knnWithinBuckets.
+  /** The trained kNN graph behind every ladder query: the trained assign
+    * at `occupancy` vectors per cell (64 — the registered default — or
+    * 128), the bucket tail at probe 2 (or 1), then `rounds` NND rounds.
+    * One round stays lazy; two or more checkpoint the base and every round
+    * (each round references its base ~5×, and lazy composition past two
+    * re-analyzes a plan that grows geometrically — the ckpt form measured
+    * 2× faster warm at sf0.1 for two rounds, identical rows). All rounds
+    * share one broadcast-path decision: `path` when the caller (a recall
+    * gate) already owns it, else cosPath once here.
     */
-  private[graft] def knnWithinBucketsProbe2(s: SparkSession, d: String,
-      assigned2: DataFrame, k: Int): DataFrame = {
-    val mvn = assigned2.join(normEmbeds(s, d), Seq("vec_id")).cache()
-    val members = mvn.where(col("bucket").isNotNull)
-      .select(col("vec_id"), col("bucket"), col("vn"))
-    val probes = mvn.select(col("vec_id"), col("vn"),
-      explode(array_compact(array(col("bucket"), col("bucket2")))).as("pb"))
-    probes.as("x")
-      .join(members.as("y"),
-        col("x.pb") === col("y.bucket") && col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr"),
-        round(Vectors.dotFast(col("x.vn"), col("y.vn")), 6).as("cos"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKPairAgg.topK(col("cos"), col("nbr"), k).as("t"))
-      .select(col("vec_id"), posexplode(col("t")))
-      .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col._2").as("nbr"), col("col._1").as("cos"))
+  private def trainedGraph(s: SparkSession, d: String, occupancy: Long = 64,
+      probe2: Boolean = true, rounds: Int = 0,
+      path: Option[CosPath] = None): DataFrame = {
+    val K = 3
+    val assigned = trainedAssign(embeds(s, d), occupancy)
+    val base = bucketTail(s, d, assigned.select(col("vec_id"), col("bucket"),
+      if (probe2) col("bucket2") else lit(null).cast("long").as("bucket2")), K)
+    if (rounds == 0) base
+    else {
+      val shared = Some(path.getOrElse(cosPath(s, d)))
+      if (rounds == 1) nndRound(s, d, base, K, path = shared)
+      else (1 to rounds).foldLeft(base.localCheckpoint()) { (g, _) =>
+        nndRound(s, d, g, K, path = shared).localCheckpoint()
+      }
+    }
+  }
+
+  /** Where a query's pair cosines come from: the broadcast CosIndex when
+    * the normalized table fits one broadcast, else the number of id-shards
+    * shardedCosVerify splits it into.
+    */
+  private[graft] type CosPath =
+    Either[Int, org.apache.spark.broadcast.Broadcast[org.apache.spark.sql.graft.CosIndex]]
+
+  /** The broadcast-path decision for a whole query — count, ceiling and
+    * index collect each run ONCE, and every NND round and gate truth of
+    * the query takes the result (per-round probes were one job per round,
+    * and a ladder gate collected the index twice, rounds + truth — r15/r16
+    * opt rounds; the converge family is driver-job-bound).
+    *
+    * The ceiling is a byte budget, not a fixed row count (r13 ADVICE: a
+    * 4M-row default shipped ~2 GB per broadcast at 0.5 KB/vector): vectors
+    * per ~1 GiB broadcast from the actual dim, or `shardThreshold` when
+    * positive. The sharded fallback costs ≤1.5-2× wall at 2M with peak
+    * broadcast |table|/R (SCALE.md r14 nndshard), so engaging it early is
+    * the safe side. An empty table yields no pairs, so it takes the
+    * broadcast path trivially.
+    */
+  private[graft] def cosPath(s: SparkSession, d: String,
+      shardThreshold: Long = -1L): CosPath = {
+    val n = embeds(s, d).count()
+    val ceiling =
+      if (shardThreshold > 0) shardThreshold
+      else {
+        val dim = normEmbeds(s, d).select(size(col("vn"))).limit(1)
+          .collect().headOption.map(_.getInt(0)).getOrElse(0)
+        if (dim <= 0) Long.MaxValue
+        else math.max(1L, (1L << 30) / (8L * dim + 48L))
+      }
+    if (n <= ceiling) Right(cosIndex(s, d))
+    else Left(math.ceil(n.toDouble / ceiling).toInt)
   }
 
   /** One NN-Descent refinement round over an arbitrary scored kNN edge
     * frame (vec_id, …, nbr, cos): undirected B(v) ∪ R(v) edge set,
-    * two-hop candidate expansion, exact cosine re-rank through
-    * TopKPairDistinctAgg. Base edges arrive already scored and union in
-    * directly. Works over any base (probe-1, probe-2, any occupancy) —
-    * the round composes with the other recall levers and with itself;
-    * the registered q_sim_knn_graph_nnd runs it once over the probe-2
-    * trained graph.
+    * two-hop candidate expansion, exact cosine re-rank through topK.
+    * Base edges arrive already scored and union in directly. Works over
+    * any base (probe-1, probe-2, any occupancy) — the round composes with
+    * the other recall levers and with itself (trainedGraph's `rounds`).
     *
     * SHAPE (r13 — the scale-safe third cut): the hop self-join runs on
     * the NARROW undirected edge set (two 16 B/row sort sides, ≈2K·n
-    * rows), and BOTH vectors are fetched onto the candidate pairs via
-    * broadcast hash joins — so no vector-laden frame ever reaches a
-    * sort. The r12 carry-vn shape (vectors riding the edge-sized hop
-    * joins) kept the pair frame out of sorts but sorted FOUR edge-sized
-    * vector-laden SMJ sides, and its per-round wall constant jumped
-    * 12.9× on 10× data at 2M vectors (~13 GB of sort spill — the memory
-    * cliff); this form's only sorts are the two narrow und sides.
+    * rows), and candidates are scored against the broadcast CosIndex —
+    * so no vector-laden frame ever reaches a sort. The r12 carry-vn shape
+    * (vectors riding the edge-sized hop joins) sorted FOUR edge-sized
+    * vector-laden SMJ sides, and its per-round wall constant jumped 12.9×
+    * on 10× data at 2M vectors (~13 GB of sort spill — the memory cliff).
     * Candidate multiplicity (one copy per shared neighbour) dies in
-    * TopKPairDistinctAgg's dedup-on-insert (equal id ⇒ equal cosine),
-    * so the pair relation is never distinct'd either. Broadcast ceiling:
-    * the normalized table is ~0.5 KB/vector (the q_sim_ann_lsh_scaled
-    * verify's documented ~10⁷-vector regime); past it, swap the two
-    * broadcast fetches for shardedCosVerify over a localCheckpoint'd
-    * candidate frame — same trade, same spec-pinned equivalence.
+    * topK's dedup-on-insert, so the pair relation is never distinct'd.
     *
     * The base frame is cached here (n·K rows; harness clearCache
-    * releases — the knnWithinBuckets cache contract applies). Composing
-    * MORE than the registered two rounds: localCheckpoint each round's
-    * output first — each round references its base ~5× and lazy plans
-    * grow geometrically under iteration (the two-star rule; see
-    * nndConverge).
+    * releases — the bucketTail cache contract applies).
     *
-    * `shardThreshold`: vectors-per-broadcast ceiling. Past it the two
-    * fetches switch to shardedCosVerify over a localCheckpoint'd
-    * candidate frame (peak broadcast |table|/R; the checkpoint bounds
-    * the R² candidate re-scans) — output-identical (NndSpec forces the
-    * path with threshold 1 and pins row equality). Default (-1) derives
-    * the ceiling from a ~1 GiB byte budget and the actual vector dim
-    * (r13 ADVICE — the old fixed 4M rows meant ~2 GB broadcasts at
-    * 0.5 KB/vector); the sharded fallback costs ≤1.5-2× wall at 2M
-    * (SCALE.md r14), so engaging it early is the safe side.
+    * `path`: the query's broadcast-path decision (cosPath); without one
+    * the round decides for itself with `shardThreshold` as the ceiling.
+    * Past the ceiling the scoring switches to shardedCosVerify over a
+    * localCheckpoint'd candidate frame (the checkpoint bounds the R²
+    * candidate re-scans) — output-identical (NndSpec forces the path and
+    * pins row equality).
     */
-  /** Byte-budget broadcast ceiling (vectors per ~1 GiB broadcast) from
-    * the actual vector dim. Driver LOOPS compute this once and pass it
-    * into every nndRound — the per-call probe was one extra job per
-    * round and head() threw on an empty embeddings table (r14 ADVICE).
-    * An empty table yields no pairs to shard, so the ceiling is MaxValue
-    * (broadcast path, trivially).
-    */
-  private[graft] def broadcastCeiling(s: SparkSession, d: String): Long = {
-    val dim = normEmbeds(s, d).select(size(col("vn"))).limit(1)
-      .collect().headOption.map(_.getInt(0)).getOrElse(0)
-    if (dim <= 0) Long.MaxValue
-    else math.max(1L, (1L << 30) / (8L * dim + 48L))
-  }
-
   private[graft] def nndRound(s: SparkSession, d: String,
       baseEdges: DataFrame, k: Int,
       shardThreshold: Long = -1L,
-      bcIdx: Option[org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.sql.graft.CosIndex]] = None): DataFrame = {
+      path: Option[CosPath] = None): DataFrame = {
     val base = baseEdges
       .select(col("vec_id"), col("nbr"), col("cos")).cache()
-    val und = base.select(col("vec_id").as("v"), col("nbr").as("u"))
-      .union(base.select(col("nbr").as("v"), col("vec_id").as("u")))
-      .distinct()
+    val und = graft.ops.Graph.undirect(
+      base.select(col("vec_id").as("v"), col("nbr").as("u")))
     // pairs sharing a neighbour u; symmetry of und makes this the same
     // candidate set as the two-hop path form (v—u—w), and the self-join
     // reads ONE reused exchange of the narrow edge frame
@@ -624,53 +651,24 @@ object SimSearch {
       .join(und.as("b"),
         col("a.u") === col("b.u") && col("a.v") =!= col("b.v"))
       .select(col("a.v").as("v1"), col("b.v").as("v2"))
-    val en = normEmbeds(s, d)
-    // a caller-provided index IS the broadcast-path decision: driver
-    // loops build it once per loop exactly when n fits the ceiling, so
-    // re-counting the table per round here was one job per round for a
-    // question the caller already answered (r15 opt round — the converge
-    // family is driver-job-bound: 81 jobs / 3.9 task-seconds).
-    val nVec =
-      if (bcIdx.isDefined) -1L
-      else embeds(s, d).count() // parquet-footer count — plan-time
-    // default threshold derives from a BYTE budget, not a fixed row
-    // count (r13 ADVICE: the old 4M-row default shipped ~2 GB per
-    // broadcast right below the cutover at 0.5 KB/vector): ~1 GiB per
-    // fetch, bytes/vector from the actual dim. The sharded fallback is
-    // priced at 2M as a graceful ≤1.5-2× slowdown with peak broadcast
-    // |table|/R (SCALE.md r14 nndshard) — engaging it early is safe;
-    // overshooting the driver/executor broadcast ceiling is not.
-    val threshold =
-      if (bcIdx.isDefined) Long.MaxValue
-      else if (shardThreshold > 0) shardThreshold
-      else broadcastCeiling(s, d)
-    val hopScored =
-      if (bcIdx.isDefined || nVec <= threshold) {
+    val hopScored = path.getOrElse(cosPath(s, d, shardThreshold)) match {
+      case Right(bc) =>
         // r15: one CosBetween lookup per candidate against the broadcast
-        // CosIndex — the SAME broadcast relation the two vector-fetch
-        // hash joins built, minus both joins and both per-pair array
-        // attachments (2 BroadcastExchanges + 2 BHJs → 0; candidates
-        // never widen past 16 B/row). isNotNull filter ≡ the old inner
-        // joins dropping ids absent from the table (none arise here —
-        // every candidate id comes from edges over the table itself).
-        val bc = bcIdx.getOrElse(cosIndex(s, d))
+        // CosIndex — the SAME broadcast relation two vector-fetch hash
+        // joins built, minus both joins and both per-pair array
+        // attachments (candidates never widen past 16 B/row). The
+        // isNotNull filter ≡ an inner join dropping ids absent from the
+        // table (none arise — every id comes from edges over the table).
         cand
           .select(col("v1").as("vec_id"), col("v2").as("nbr"),
             org.apache.spark.sql.graft.GraftSql
               .cosBetween(col("v1"), col("v2"), bc).as("cos"))
           .where(col("cos").isNotNull)
-      } else {
-        val shards = math.ceil(nVec.toDouble / threshold).toInt
-        shardedCosVerify(en, cand.localCheckpoint(), shards)
+      case Left(shards) =>
+        shardedCosVerify(normEmbeds(s, d), cand.localCheckpoint(), shards)
           .select(col("v1").as("vec_id"), col("v2").as("nbr"), col("cos"))
-      }
-    hopScored.union(base)
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKPairDistinctAgg
-        .topK(col("cos"), col("nbr"), k).as("t"))
-      .select(col("vec_id"), posexplode(col("t")))
-      .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col._2").as("nbr"), col("col._1").as("cos"))
+    }
+    topK(hopScored.union(base), k)
   }
 
   /** NN-Descent iterate-until-decay: apply `nndRound` until the round
@@ -680,29 +678,23 @@ object SimSearch {
     * NN-Descent's stopping rule is exactly this counter decaying;
     * componentsFixpoint (Dedup.scala) is the in-repo template.
     *
-    * Plan discipline (the two-star rule + r12 ADVICE): each round
-    * references its base ~5× (two und arms, hop join, union), so lazy
-    * composition grows the ANALYZED plan geometrically — every round's
-    * output is localCheckpoint'd before the next composes over it, and
-    * the per-round counts are driver actions off the checkpointed frame
-    * (edge frames are n·K rows — K-bounded, never pair-sized).
-    * Returns the certificate frame; callers wanting the converged graph
-    * use `nndGraphAfter` (same checkpoint discipline, same rounds).
+    * Plan discipline (trainedGraph's): every round's output is
+    * localCheckpoint'd before the next composes over it, and the
+    * per-round counts are driver actions off the checkpointed frame
+    * (edge frames are n·K rows — K-bounded, never pair-sized). Callers
+    * wanting the converged graph use trainedGraph's `rounds`.
     */
   private[graft] def nndConverge(s: SparkSession, d: String, k: Int,
       maxRounds: Int): DataFrame = {
     import s.implicits._
-    var g = queries("q_sim_knn_graph_trained2")(s, d)
+    var g = trainedGraph(s, d)
       .select(col("vec_id"), col("nbr"), col("cos")).localCheckpoint()
     val cert = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
     var r = 1
     var newEdges = -1L
-    val ceiling = broadcastCeiling(s, d) // once per loop, not per round
-    // one collect+broadcast per LOOP for the pair-cosine index too (the
-    // ceiling precedent) — but only when the broadcast path applies
-    val idx = if (embeds(s, d).count() <= ceiling) Some(cosIndex(s, d)) else None
+    val path = Some(cosPath(s, d)) // once per loop, not per round
     while (r <= maxRounds && newEdges != 0L) {
-      val next = nndRound(s, d, g, k, ceiling, idx)
+      val next = nndRound(s, d, g, k, path = path)
         .select(col("vec_id"), col("nbr"), col("cos")).localCheckpoint()
       // ONE counting job per round (r15 opt): n_new and n_edges from a
       // single left join + agg — the old left_anti count + count() pair
@@ -721,59 +713,6 @@ object SimSearch {
       r += 1
     }
     cert.toSeq.toDF("round", "n_new", "n_edges")
-  }
-
-  /** The graph after `rounds` NND rounds over the probe-2 trained base,
-    * localCheckpoint'd per round (never compose rounds lazily past two —
-    * the two-star rule). Shared by the round-3 ladder gate.
-    */
-  private def nndGraphAfter(s: SparkSession, d: String, k: Int,
-      rounds: Int,
-      sharedIdx: Option[org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.sql.graft.CosIndex]] = None): DataFrame = {
-    var g = queries("q_sim_knn_graph_trained2")(s, d)
-      .select(col("vec_id"), col("rank"), col("nbr"), col("cos"))
-      .localCheckpoint()
-    // r16: a ladder caller that already owns the broadcast index passes
-    // it in — the broadcast-path decision AND the index collect then cost
-    // zero jobs here (the broadcastCeiling precedent, one level up).
-    val (ceiling, idx) = sharedIdx match {
-      case some @ Some(_) => (Long.MaxValue, some)
-      case None =>
-        val c = broadcastCeiling(s, d) // once per loop, not per round
-        (c, if (embeds(s, d).count() <= c) Some(cosIndex(s, d)) else None)
-    }
-    (1 to rounds).foreach { _ =>
-      g = nndRound(s, d, g, k, ceiling, idx).localCheckpoint()
-    }
-    g
-  }
-
-  /** One broadcast-path decision + index build for a whole recall-ladder
-    * query (r16): count, ceiling, and collect run ONCE and the result is
-    * shared by the NND rounds and the gate truth — each ladder gate
-    * previously collected the index twice (rounds + truth) and re-ran the
-    * count/ceiling probes. None past the ceiling (rounds shard; the gate
-    * truth still builds its own index — brute-force truth is
-    * broadcast-domain by contract, SCALE.md recallsampled).
-    */
-  private def ladderIdx(s: SparkSession, d: String)
-      : Option[org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.sql.graft.CosIndex]] =
-    if (embeds(s, d).count() <= broadcastCeiling(s, d)) Some(cosIndex(s, d))
-    else None
-
-  /** The tuned kNN graph (occupancy 128 + probe-2 + one NND round) behind
-    * q_sim_knn_graph_tuned and its recall gate, which passes its shared
-    * index as `idx` (ladderIdx doc).
-    */
-  private def tunedGraph(s: SparkSession, d: String,
-      idx: Option[org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.sql.graft.CosIndex]] = None): DataFrame = {
-    val K = 3
-    val assigned2 = trainedAssign(embeds(s, d), occupancy = 128)
-      .select(col("vec_id"), col("bucket"), col("bucket2")).cache()
-    nndRound(s, d, knnWithinBucketsProbe2(s, d, assigned2, K), K, -1L, idx)
   }
 
   /** Driver-decoded broadcast image of the WHOLE normalized embedding
@@ -798,32 +737,34 @@ object SimSearch {
     s.sparkContext.broadcast(new org.apache.spark.sql.graft.CosIndex(ids, vecs))
   }
 
-  /** Shared exact-recall gate behind the four kNN ladder points
-    * (probe-1, probe-2, +1 NND round, +2 rounds) — one implementation,
-    * per the r12 ADVICE factoring. Truth is the brute-force global top-3
-    * as ONE map-only fold per vector over the broadcast CosIndex
-    * (r15 optimization): the prior BNL-join + TopKPairAgg form
-    * broadcast the same table but materialized all n² joined pair rows
-    * (two 64-double arrays each) and paid a groupBy exchange; CosTopK
-    * emits the identical (cos DESC, id ASC) top-3 with 0 Joins and
-    * 0 Exchanges on the truth side (CosIndexSpec pins row equality).
+  /** Shared exact-recall gate behind every kNN ladder point: the
+    * trainedGraph of the same parameters against the brute-force global
+    * top-3, one row (n_true, n_found, n_hit, recall). Truth is ONE
+    * map-only fold per vector over the broadcast CosIndex (r15
+    * optimization): the prior BNL-join + TopKPairAgg form broadcast the
+    * same table but materialized all n² joined pair rows (two 64-double
+    * arrays each) and paid a groupBy exchange; CosTopK emits the
+    * identical (cos DESC, id ASC) top-3 with 0 Joins and 0 Exchanges on
+    * the truth side (CosIndexSpec pins row equality). A gate over NND
+    * rounds makes the query's one broadcast-path decision and hands it to
+    * both the rounds and the truth side (r16: one collect+broadcast per
+    * gate instead of two). Past the ceiling the truth still builds its
+    * own index — brute-force truth is broadcast-domain by contract
+    * (SCALE.md recallsampled).
     */
-  private def recallGate(s: SparkSession, d: String,
-      found0: DataFrame,
-      sharedIdx: Option[org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.sql.graft.CosIndex]] = None): DataFrame = {
+  private def recallGate(s: SparkSession, d: String, occupancy: Long = 64,
+      probe2: Boolean = true, rounds: Int = 0): DataFrame = {
+    val path = if (rounds > 0) Some(cosPath(s, d)) else None
+    val found = trainedGraph(s, d, occupancy, probe2, rounds, path)
+      .select(col("vec_id"), col("nbr"))
     // spread: the n-per-row fold is the whole truth cost and the fixture
     // scan is one task (Core.spread doc) — parallelize it to the session.
-    // r16: ladder callers whose found side already built the broadcast
-    // CosIndex pass it in — the truth fold reuses it instead of paying a
-    // second collect+broadcast per gate query (§1.2 don't compute twice).
-    val idx = sharedIdx.getOrElse(cosIndex(s, d))
+    val idx = path.flatMap(_.toOption).getOrElse(cosIndex(s, d))
     val truth = Core.spread(normEmbeds(s, d))
       .select(col("vec_id"),
         explode(org.apache.spark.sql.graft.GraftSql
           .cosTopK(col("vn"), col("vec_id"), 3, idx)).as("p"))
       .select(col("vec_id"), col("p._2").as("nbr"))
-    val found = found0.select(col("vec_id"), col("nbr"))
     // ONE pass over each side (r15): the old three-branch form (count
     // truth, count found, semi-join count) planned the expensive found
     // graph lineage TWICE (count + semi-join sides share no exchange)
@@ -1043,10 +984,9 @@ object SimSearch {
     // centroids and C GROWS with n (C ≈ n/target_occupancy — here 32 for
     // the fixture; a cluster deployment retunes C, not the plan), where
     // the LSH banding's bucket count was fixed by the signature width.
-    // Output is O(n·k), linear by construction. The bucket self-join
-    // carries ids only (hard-won rule: broadcast-able id re-fetch beats
-    // carrying vectors through the pair shuffle); the per-vector top-3 is
-    // one window over the bucket-pruned pair set.
+    // Output is O(n·k), linear by construction. The bucket tail carries
+    // vn into the cell join and keeps each vector's top-3 in a bounded
+    // aggregator over the bucket-pruned pair set (bucketTail doc).
     "q_sim_knn_graph" -> ((s, d) => {
       val K = 3
       val e = embeds(s, d)
@@ -1058,12 +998,8 @@ object SimSearch {
       // cluster; past that a two-level (hierarchical k-means) assign
       // bounds it, same as FAISS's IVF training path.
       val C = math.max(32L, e.count() / 64).toInt
-      // both self-join branches read the assignment; the frame is two
-      // longs per vector, so caching beats re-running the argmax scan
-      // (Bench/Verify clearCache() between queries)
-      val assigned = bucketAssign(e, C)
-        .select(col("vec_id"), col("bucket")).cache()
-      knnWithinBuckets(s, d, assigned, K)
+      bucketTail(s, d, bucketAssign(e, C).select(col("vec_id"),
+        col("bucket"), lit(null).cast("long").as("bucket2")), K)
     }),
 
     // kNN graph with the TWO-LEVEL assign: same bucket-pruned top-3 tail,
@@ -1084,9 +1020,8 @@ object SimSearch {
       val e = embeds(s, d)
       val C = math.max(32L, e.count() / 64).toInt
       val n1 = math.max(4, math.ceil(math.sqrt(C.toDouble)).toInt)
-      val assigned = bucketAssignTwoLevel(e, C, n1)
-        .select(col("vec_id"), col("bucket")).cache()
-      knnWithinBuckets(s, d, assigned, K)
+      bucketTail(s, d, bucketAssignTwoLevel(e, C, n1).select(col("vec_id"),
+        col("bucket"), lit(null).cast("long").as("bucket2")), K)
     }),
 
     // kNN graph with TRAINED centroids — the full IVF build path at
@@ -1100,15 +1035,11 @@ object SimSearch {
     // stage — sample membership, both two-level assigns, the rounded
     // means — is replicated in the oracle, so the green row pins the
     // entire train+assign pipeline cross-engine.
-    "q_sim_knn_graph_trained" -> ((s, d) => {
-      val K = 3
-      val assigned = trainedAssign(embeds(s, d))
-        .select(col("vec_id"), col("bucket")).cache()
-      knnWithinBuckets(s, d, assigned, K)
-    }),
+    "q_sim_knn_graph_trained" -> ((s, d) =>
+      trainedGraph(s, d, probe2 = false)),
 
     // Probe-2 trained kNN graph: identical train+assign, but the search
-    // tail scans BOTH probed cells per vector (knnWithinBucketsProbe2) —
+    // tail scans BOTH probed cells per vector (bucketTail's nprobe=2) —
     // the recall lever the r10 verdict asked to A/B. The assignment (and
     // so the index side) is byte-identical to q_sim_knn_graph_trained;
     // only the probe side widens. Measured (SCALE.md r11): recall +36%
@@ -1116,17 +1047,11 @@ object SimSearch {
     // vectors (95.5 vs 86.6 s — the tail is scan-bandwidth-bound, so the
     // predicted 2× pair-work penalty never materializes). RECOMMENDED
     // DEFAULT for embedding users; probe-1 stays as the A/B baseline.
-    "q_sim_knn_graph_trained2" -> ((s, d) => {
-      val K = 3
-      val assigned2 = trainedAssign(embeds(s, d))
-        .select(col("vec_id"), col("bucket"), col("bucket2")).cache()
-      knnWithinBucketsProbe2(s, d, assigned2, K)
-    }),
+    "q_sim_knn_graph_trained2" -> ((s, d) => trainedGraph(s, d)),
 
     // Recall gate for the probe-2 variant — same shape as
     // q_sim_knn_recall_trained so the two rows A/B directly.
-    "q_sim_knn_recall_trained2" -> ((s, d) =>
-      recallGate(s, d, queries("q_sim_knn_graph_trained2")(s, d))),
+    "q_sim_knn_recall_trained2" -> ((s, d) => recallGate(s, d)),
 
     // One NN-Descent refinement round (Dong et al., WWW'11) over the
     // probe-2 trained graph — the recall lever PAST nprobe: a vector's
@@ -1144,10 +1069,10 @@ object SimSearch {
     // edge-sized VECTOR-LADEN SMJ sides (~13 GB spill at 2M — the memory
     // cliff). Shipped (r13): the hop join runs NARROW and both vectors
     // broadcast-fetch onto candidates — no sort ever sees a vector
-    // column; scored pairs flow straight into TopKPairDistinctAgg's
-    // map-side combine (multi-path duplicates die in the K-sized buffer;
-    // equal id ⇒ equal cosine, the aggregator's guarded contract), so
-    // the pair relation is never shuffled, sorted, or distinct'd either.
+    // column; scored pairs flow straight into topK's map-side combine
+    // (multi-path duplicates die in the K-sized buffer; equal id ⇒ equal
+    // cosine, the aggregator's guarded contract), so the pair relation is
+    // never shuffled, sorted, or distinct'd either.
     // Same-session A/B at 2M: 126.7 vs 207.6 (carry-vn) vs 233.2 s
     // (naive). Base edges arrive already scored from the probe-2 tail.
     // Hits are MONOTONE over the base graph: cand ⊇ base, so a base edge
@@ -1155,8 +1080,7 @@ object SimSearch {
     // members (NndSpec pins recall ≥ probe-2's). Rounds compose — the
     // fixpoint driver with the convergence certificate is
     // q_sim_knn_nnd_converge; one round is registered here.
-    "q_sim_knn_graph_nnd" -> ((s, d) =>
-      nndRound(s, d, queries("q_sim_knn_graph_trained2")(s, d), 3)),
+    "q_sim_knn_graph_nnd" -> ((s, d) => trainedGraph(s, d, rounds = 1)),
 
     // TWO NND rounds — the composition claim under the oracle gate: the
     // round is a graph→graph operator, so iterating it is just function
@@ -1164,30 +1088,20 @@ object SimSearch {
     // NN-Descent converges in a handful of rounds at K·log n cost). The
     // oracle replays round 2's expansion over round 1's top-3 CTE —
     // cross-engine proof that composition semantics, not just one
-    // application, match. Composed via nndGraphAfter (localCheckpoint
-    // between rounds): the lazy nndRound(nndRound(...)) form re-analyzes
-    // a ~170-exchange plan and re-derives shared subtrees — the ckpt form
-    // measured 2× faster warm at sf0.1 (Probe nnd2form: 2.9 vs 5.7 s),
-    // identical rows.
-    "q_sim_knn_graph_nnd2" -> ((s, d) => nndGraphAfter(s, d, 3, 2)),
+    // application, match. Rounds are checkpointed (trainedGraph doc): the
+    // lazy nndRound(nndRound(...)) form re-analyzes a ~170-exchange plan
+    // and re-derives shared subtrees — the ckpt form measured 2× faster
+    // warm at sf0.1 (2.9 vs 5.7 s), identical rows.
+    "q_sim_knn_graph_nnd2" -> ((s, d) => trainedGraph(s, d, rounds = 2)),
 
     // Recall gate for the two-round variant — fourth point on the exact
-    // recall ladder (probe-1, probe-2, +1 round, +2 rounds). One shared
-    // index per query (r16): rounds and gate truth reuse ONE
-    // collect+broadcast instead of two (ladderIdx doc).
-    "q_sim_knn_recall_nnd2" -> ((s, d) => {
-      val idx = ladderIdx(s, d)
-      recallGate(s, d, nndGraphAfter(s, d, 3, 2, idx), idx)
-    }),
+    // recall ladder (probe-1, probe-2, +1 round, +2 rounds). Rounds and
+    // gate truth share one index (recallGate doc).
+    "q_sim_knn_recall_nnd2" -> ((s, d) => recallGate(s, d, rounds = 2)),
 
     // Recall gate for the NND round — same shape as the trained/trained2
-    // gates so the ladder rows A/B directly (shared index, ladderIdx doc).
-    "q_sim_knn_recall_nnd" -> ((s, d) => {
-      val idx = ladderIdx(s, d)
-      val g = nndRound(s, d, queries("q_sim_knn_graph_trained2")(s, d), 3,
-        -1L, idx)
-      recallGate(s, d, g, idx)
-    }),
+    // gates so the ladder rows A/B directly.
+    "q_sim_knn_recall_nnd" -> ((s, d) => recallGate(s, d, rounds = 1)),
 
     // Graph-based beam search — the HNSW-style SERVING path over the kNN
     // graph the build/refine/store family produces (the third classic ANN
@@ -1211,11 +1125,9 @@ object SimSearch {
       val R = 3
       val en = normEmbeds(s, d)
       val nVec = embeds(s, d).count()
-      val baseG = queries("q_sim_knn_graph_trained2")(s, d)
-        .select(col("vec_id"), col("nbr")).localCheckpoint()
-      val und = baseG.select(col("vec_id").as("v"), col("nbr").as("u"))
-        .union(baseG.select(col("nbr").as("v"), col("vec_id").as("u")))
-        .distinct().localCheckpoint()
+      val baseG = trainedGraph(s, d)
+        .select(col("vec_id").as("v"), col("nbr").as("u")).localCheckpoint()
+      val und = graft.ops.Graph.undirect(baseG).localCheckpoint()
       // r15: scoring via CosBetween against the broadcast CosIndex — the
       // old form re-joined the frontier against the embeddings table
       // EVERY round (a corpus-sized scan per round at scale); now each
@@ -1284,11 +1196,9 @@ object SimSearch {
       val qs = en.where(pmod(h("bq|"), lit(math.max(1L, nVec / 5))) === 0)
         .select(col("vec_id").as("qid"), col("vn").as("qv"))
         .localCheckpoint()
-      val baseG = queries("q_sim_knn_graph_trained2")(s, d)
-        .select(col("vec_id"), col("nbr")).localCheckpoint()
-      val und = baseG.select(col("vec_id").as("v"), col("nbr").as("u"))
-        .union(baseG.select(col("nbr").as("v"), col("vec_id").as("u")))
-        .distinct().localCheckpoint()
+      val baseG = trainedGraph(s, d)
+        .select(col("vec_id").as("v"), col("nbr").as("u")).localCheckpoint()
+      val und = graft.ops.Graph.undirect(baseG).localCheckpoint()
       // r15: per-round scoring is one CosBetween per (qid, candidate)
       // against the broadcast CosIndex — replaces a corpus-scan join plus
       // a broadcast query join PER ROUND with a frontier-sized map (both
@@ -1435,12 +1345,8 @@ object SimSearch {
     "q_sim_knn_nnd_converge" -> ((s, d) => nndConverge(s, d, 3, 3)),
 
     // Fifth point on the exact recall ladder (probe-1, probe-2, +1, +2,
-    // +3 rounds) — the round-3 graph under the same shared gate (one
-    // shared index per query, ladderIdx doc).
-    "q_sim_knn_recall_nnd3" -> ((s, d) => {
-      val idx = ladderIdx(s, d)
-      recallGate(s, d, nndGraphAfter(s, d, 3, 3, idx), idx)
-    }),
+    // +3 rounds) — the round-3 graph under the same shared gate.
+    "q_sim_knn_recall_nnd3" -> ((s, d) => recallGate(s, d, rounds = 3)),
 
     // The best MEASURED kNN configuration, registered under the oracle
     // gate (r12 verdict task 4): occupancy 128 + probe-2 + one NND
@@ -1450,15 +1356,13 @@ object SimSearch {
     // The shared default stays occ=64 because semdedup's pair stage
     // (Σ occ·n) doubles under occ=128; this query IS the kNN-family
     // default a user should reach for, with its own recall gate below.
-    "q_sim_knn_graph_tuned" -> ((s, d) => tunedGraph(s, d)),
+    "q_sim_knn_graph_tuned" -> ((s, d) =>
+      trainedGraph(s, d, occupancy = 128, rounds = 1)),
 
     // Recall gate for the tuned configuration — the ladder's measured
-    // optimum under the same exact-truth gate as every other point (one
-    // shared index per query, ladderIdx doc).
-    "q_sim_knn_recall_tuned" -> ((s, d) => {
-      val idx = ladderIdx(s, d)
-      recallGate(s, d, tunedGraph(s, d, idx), idx)
-    }),
+    // optimum under the same exact-truth gate as every other point.
+    "q_sim_knn_recall_tuned" -> ((s, d) =>
+      recallGate(s, d, occupancy = 128, rounds = 1)),
 
     // Batch twin of Streams.ivfRouteStream — the streaming-ANN ingest
     // router under the oracle gate: a 1-in-8 hash-sampled "arriving"
@@ -1486,7 +1390,7 @@ object SimSearch {
     // edges; one row (n_true, n_found, n_hit, recall), rank arithmetic
     // only so the row is hash-exact.
     "q_sim_knn_recall_trained" -> ((s, d) =>
-      recallGate(s, d, queries("q_sim_knn_graph_trained")(s, d))),
+      recallGate(s, d, probe2 = false)),
 
     // Real IVF training: 2 deterministic Lloyd iterations (driver-held
     // centroids as broadcast literals, per-dimension mean via posexplode),
@@ -2190,7 +2094,7 @@ object SimSearch {
     * the OTHER probed cell (b2 — the SQL twin of the assign's
     * least(m1, m2), null when either cell is empty), the widened probe
     * list, and the probe-2 scored pairs `sc2` (index side stays the
-    * primary bucket, matching knnWithinBucketsProbe2).
+    * primary bucket, matching bucketTail).
     */
   private def trainedKnn2Ctes(occ: Int = 64): String =
     s"""${trainedKnnCtes(occ)},

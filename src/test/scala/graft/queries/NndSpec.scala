@@ -93,6 +93,31 @@ class NndSpec extends SparkSpec {
     val r2 = recallOf("q_sim_knn_recall_nnd2")
     assert(r2 >= r1, s"round-2 recall $r2 below round-1's $r1 — the " +
       "composed round lost edges it is a superset of")
+    val r3 = recallOf("q_sim_knn_recall_nnd3")
+    assert(r3 >= r2, s"round-3 recall $r3 below round-2's $r2 — the " +
+      "composed round lost edges it is a superset of")
+  }
+
+  test("ladder queries run no more driver jobs than their pinned counts") {
+    // one shared broadcast index per query and a checkpoint per round
+    // past the first are job-count properties: a dropped shared index
+    // adds a collect, an extra per-round checkpoint adds its jobs. The
+    // pins are the counts the ladder ran before it moved onto one graph
+    // builder (noop write, this test session, caches cleared).
+    val pinned = Map(
+      "q_sim_knn_recall_nnd" -> 38L,
+      "q_sim_knn_recall_nnd2" -> 51L,
+      "q_sim_knn_recall_nnd3" -> 62L,
+      "q_sim_knn_recall_tuned" -> 38L,
+      "q_sim_knn_nnd_converge" -> 66L)
+    pinned.foreach { case (q, maxJobs) =>
+      spark.catalog.clearCache()
+      val (_, m) = org.apache.spark.sql.graft.RunMetrics.measure(spark) {
+        SimSearch.queries(q)(spark, dir)
+          .write.mode("overwrite").format("noop").save()
+      }
+      assert(m.jobs <= maxJobs, s"$q ran ${m.jobs} jobs, pinned at $maxJobs")
+    }
   }
 
   test("the beyond-broadcast sharded verify path is output-identical: " +
