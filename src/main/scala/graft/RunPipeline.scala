@@ -25,9 +25,9 @@ import graft.sources.{Loaders, Sources}
   */
 object RunPipeline {
 
-  /** Session-independent core so the spec can drive it on TestSpark. */
-  def execute(spark: SparkSession, inDir: String, outDir: String,
-              whitelistPath: Option[String]): Unit = {
+  /** The loaded, normalized inputs of `inDir` (layout above). */
+  def inputs(spark: SparkSession, inDir: String,
+             whitelistPath: Option[String]): DrugDisease.Inputs = {
     def j(name: String, schema: org.apache.spark.sql.types.StructType) =
       Sources.json(spark, s"$inDir/$name.json", schema)
 
@@ -46,7 +46,7 @@ object RunPipeline {
     val evidences = Loaders.literatureEvidences(evidencesRaw)
       .unionByName(Loaders.geneticsEvidences(studies, predictions))
 
-    val inputs = DrugDisease.Inputs(
+    DrugDisease.Inputs(
       drugs = Loaders.drugs(drugsRaw),
       targets = targets,
       genesLut = Loaders.genesLut(targets),
@@ -65,8 +65,13 @@ object RunPipeline {
         Option(s"$inDir/expression.json")
           .filter(p => new java.io.File(p).isFile),
         Schemas.expression).map(Loaders.expression))
+  }
 
-    val (associations, drugDisease) = DrugDisease.run(inputs)
+  /** Session-independent core so the spec can drive it on TestSpark. */
+  def execute(spark: SparkSession, inDir: String, outDir: String,
+              whitelistPath: Option[String]): Unit = {
+    val (associations, drugDisease) =
+      DrugDisease.run(inputs(spark, inDir, whitelistPath))
     // both sinks read the cached associations frame; release it even when a
     // write fails, so a long-lived session does not gain a cache entry per run
     try {

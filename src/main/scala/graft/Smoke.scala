@@ -41,8 +41,9 @@ object Smoke {
             // counters ride on the run's own jobs: JOBS (driver-scheduled
             // actions), TASKS and TASKSEC (summed executor run time) tell a
             // driver-bound run (many jobs, little task time) from a
-            // compute-bound one; SHW and SPILL are MB. SEC stays the
-            // body's wall, without the listener-bus drain.
+            // compute-bound one; SHW and SPILL are MB; CGEN counts the
+            // classes Janino compiled (codegen cache misses). SEC stays
+            // the body's wall, without the listener-bus drain.
             val (sec, m) = RunMetrics.measure(spark) {
               val t0 = System.nanoTime()
               df = SparkEntry.queries(name)(spark, sfDir)
@@ -51,7 +52,8 @@ object Smoke {
             }
             println(s"QUERY=$name RUN=$run SEC=$sec JOBS=${m.jobs} " +
               s"TASKS=${m.tasks} TASKSEC=${m.taskSeconds} " +
-              s"SHW=${mb(m.shuffleWriteBytes)} SPILL=${mb(m.spillBytes)}")
+              s"SHW=${mb(m.shuffleWriteBytes)} SPILL=${mb(m.spillBytes)} " +
+              s"CGEN=${m.codegenCompiles}")
           }
           // the row count is one untimed action after the timed runs
           println(s"QUERY=$name ROWS=${df.count()}")

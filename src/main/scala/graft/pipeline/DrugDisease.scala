@@ -14,10 +14,18 @@ import graft.ops.{Graph, Scoring}
   * at exactly the multi-consumer nodes (the reference missed two: `evs` and
   * `associations`, re-computed per sink — SURVEY §3.2).
   *
-  * Scale notes per stage are inline; the pipeline's wide stages are the
-  * adjacency groupBy, the association groupBy (bounded by top-K slice), the
-  * pivot (explicit value list — no distinct-values driver job), and the
-  * bundle joins (dimension sides broadcast-eligible).
+  * Scale notes per stage are inline. `run` plans each branch once: every
+  * input is scanned once except targets (the gene broadcast and the target
+  * dimension project it differently), drugs and diseases (two consumers
+  * each). Its shuffles are the evs_id group of the one-pass evidence
+  * scoring (no pivot and no join back), the network regroup, the
+  * association groupBy (bounded by top-K slice) and the bundle groupBys.
+  * Every dimension side is broadcast. Two exchanges are shared, and AQE
+  * reuses them only because both consumers plan identical subtrees: the
+  * gene broadcast of the two accession joins, and the network LUT that
+  * `propagate` and the target dimension join. Each extra branch costs its
+  * own scan, stages and generated classes, which Janino compiles again on
+  * every execute once a run needs more than Spark's 100-entry codegen cache.
   */
 object DrugDisease {
 
@@ -62,14 +70,12 @@ object DrugDisease {
     // With expression data, the network keeps only tissue-co-active edges
     // (sc:370, 134-157); without it the filter is skipped — the reference
     // requires the expression input, so absence is a documented relaxation.
-    val lut = in.expression.foldLeft(networkLut(in.ppiEdges, in.genesLut))(
-      tissueFilteredLut)
-    val scores = evidenceScores(
-      in.evidences.select(col("evs_id"), col("datasource"), col("score")),
-      Seq("genetics", "europepmc"))
-    val evs = in.evidences
-      .select(col("evs_id"), col("target_id"), col("disease_id"))
-      .join(scores, Seq("evs_id"))
+    // The filter runs on the gene pairs, before the one regroup: the rows of
+    // tissueFilteredLut(networkLut(…)) with one aggregation instead of two.
+    // `propagate` and dfT join the same broadcast LUT.
+    val pairs = genePairs(in.ppiEdges, in.genesLut)
+    val lut = in.expression.fold(adjacencyLut(pairs))(coActiveNeighbours(pairs, _))
+    val evs = scoredEvidences(in.evidences, Seq("genetics", "europepmc"))
     val whitelistMode = in.whitelist.isDefined
     val keyed = in.whitelist match {
       case Some(wl) =>
@@ -89,13 +95,16 @@ object DrugDisease {
     // drug-bundle-per-disease, target dim ⟕ drug-bundle-per-target ⟕
     // network neighbourhoods. Bundle sides are left_outer exactly as the
     // reference; the dims themselves join the score frame INNER (sc:455-456,
-    // 468-469), so associations only materialize for known dim rows.
+    // 468-469), so associations only materialize for known dim rows. Every
+    // side but the score frame is a dimension and broadcast, so the score
+    // frame is never shuffled or sorted for these joins.
     val dfD = in.diseases
-      .join(drugsForDisease(in.drugs, in.aesByDrug, in.aggregations),
+      .join(broadcast(drugsForDisease(in.drugs, in.aesByDrug, in.aggregations)),
         Seq("disease_id"), "left_outer")
     val dfT = in.targets
-      .join(drugsForTarget(in.drugs, in.aesByTarget), Seq("target_id"), "left_outer")
-      .join(lut.select(col("target_id"), col("neighbours")),
+      .join(broadcast(drugsForTarget(in.drugs, in.aesByTarget)),
+        Seq("target_id"), "left_outer")
+      .join(broadcast(lut.select(col("target_id"), col("neighbours"))),
         Seq("target_id"), "left_outer")
     // Whitelist associations are keyed by whitelist id, but the drug bundles
     // are keyed by real disease ids — recover the member diseases first, as
@@ -113,23 +122,25 @@ object DrugDisease {
     // row set without its size(null) = -1 sentinel (see aeContainment).
     val associations = newDrugs(
       assocByDisease
-        .join(dfT, Seq("target_id"))
-        .join(dfD, Seq("disease_id")),
+        .join(broadcast(dfT), Seq("target_id"))
+        .join(broadcast(dfD), Seq("disease_id")),
       dropEmpty = !whitelistMode)
       .cache()
     // The JSON sink projection (sc:478-494): names, therapeutic areas, the
     // bundle-derived disease AE profile (null-safe at both array levels —
     // the reference's unguarded flatten nulls the whole profile when ONE
-    // member drug lacks AE data), per-bundle aggregates, hypotheses.
+    // member drug lacks AE data; array_except drops those null AE lists,
+    // and the whole AE lists it also dedups change nothing after
+    // array_distinct), per-bundle aggregates, hypotheses. Every expression
+    // is codegen'd: a lambda here would cost a separately compiled
+    // projection per execute.
     val drugDiseaseDF = associations.select(
       col("disease_id"), col("target_id"),
       col("harmonic"), col("harmonic_genetics"), col("harmonic_literature"),
       col("target_name"), col("disease_name"), col("therapeutic_areas"),
       when(col("drugs_for_disease").isNotNull,
-        array_distinct(flatten(transform(col("drugs_for_disease"),
-          d => coalesce(
-            transform(d.getField("aes"), a => a.getField("event")),
-            array().cast("array<string>"))))))
+        array_distinct(flatten(array_except(col("drugs_for_disease.aes"),
+          array(lit(null)))).getField("event")))
         .otherwise(array().cast("array<string>"))
         .as("disease_aes_from_drugs"),
       array_distinct(flatten(col("drugs_for_disease.indication_ids")))
@@ -146,24 +157,39 @@ object DrugDisease {
     (associations, scored)
   }
 
-  /** Network LUT build (sc:44-74): undirect edge list, translate accession →
-    * gene id on both endpoints, collapse to adjacency.
+  /** Network LUT build (sc:44-74): translate accession → gene id on both
+    * endpoints, emit both directions of every edge, collapse to adjacency.
     *
     * edges: (A, B) accession pairs; genes: (accession, id).
     * Output: (target_id, neighbours array<id>, degree, degree_approx).
-    * genes is small → broadcast both joins (the reference relied on .cache +
-    * whatever join Spark 2.4 picked; we pin broadcast).
     */
-  def networkLut(edges: DataFrame, genes: DataFrame): DataFrame = {
-    val und = Graph.undirect(edges.select(col("A"), col("B")))
+  def networkLut(edges: DataFrame, genes: DataFrame): DataFrame =
+    adjacencyLut(genePairs(edges, genes))
+
+  private def adjacencyLut(pairs: DataFrame): DataFrame =
+    Graph.adjacency(pairs).withColumnRenamed("src", "target_id")
+
+  /** Both directions of every PPI edge as gene pairs (target_id, neighbour).
+    * genes is small → broadcast both joins (the reference relied on .cache +
+    * whatever join Spark 2.4 picked; we pin broadcast). Translating before
+    * the direction explode keeps the two joins' broadcast sides identical:
+    * a consumer's `isnotnull(target_id)` stops at the generator instead of
+    * reaching one join's gene side, so AQE reuses one broadcast and
+    * targets.json is read once for both. Reciprocal and repeated edges give
+    * repeated pairs, which every consumer's `collect_set` drops, so no
+    * distinct (and no second interactions scan) is needed; a gene with a
+    * null id gives pairs with a null end, which `collect_set` ignores.
+    */
+  private def genePairs(edges: DataFrame, genes: DataFrame): DataFrame = {
     val g = broadcast(genes.select(col("accession"), col("id")))
-    val translated = und
-      .join(g, und("A") === g("accession"))
+    val e = edges.select(col("A"), col("B"))
+    e.join(g, e("A") === g("accession"))
       .select(col("id").as("A_id"), col("B"))
       .join(g, col("B") === g("accession"))
-      .select(col("A_id"), col("id").as("B_id"))
-    Graph.adjacency(translated.toDF("src", "dst"))
-      .withColumnRenamed("src", "target_id")
+      .select(explode(array(
+        struct(col("A_id").as("target_id"), col("id").as("neighbour")),
+        struct(col("id").as("target_id"), col("A_id").as("neighbour")))).as("e"))
+      .select(col("e.target_id"), col("e.neighbour"))
   }
 
   /** Tissue-activity edge filter (sc:134-157): a neighbour stays in the
@@ -178,13 +204,19 @@ object DrugDisease {
     * lut: (target_id, neighbours, …); expression: (target_id,
     * active_tissues). Output: (target_id, neighbours) — tissue-filtered.
     */
-  def tissueFilteredLut(lut: DataFrame, expression: DataFrame): DataFrame = {
+  def tissueFilteredLut(lut: DataFrame, expression: DataFrame): DataFrame =
+    coActiveNeighbours(
+      lut.select(col("target_id"), explode(col("neighbours")).as("neighbour")),
+      expression)
+
+  /** pairs: (target_id, neighbour). Output: (target_id, neighbours) — the
+    * sorted distinct co-active neighbours; a target with none has no row.
+    */
+  private def coActiveNeighbours(pairs: DataFrame, expression: DataFrame): DataFrame = {
     val ex = broadcast(expression.select(col("target_id"), col("active_tissues")))
-    lut.select(col("target_id"), col("neighbours"))
+    pairs
       .join(ex.withColumnRenamed("active_tissues", "target_tissues"),
         Seq("target_id"))
-      .withColumn("neighbour", explode(col("neighbours")))
-      .drop("neighbours")
       .join(ex.toDF("neighbour", "neighbour_tissues"), Seq("neighbour"))
       .where(size(array_intersect(
         col("target_tissues"), col("neighbour_tissues"))) > 0)
@@ -192,43 +224,67 @@ object DrugDisease {
       .agg(sort_array(collect_set(col("neighbour"))).as("neighbours"))
   }
 
-  /** Disease ontology (sc:169-187): ancestors = flatten of path_codes
-    * (array_distinct replaces the reference's flatten+toSet UDF, sc:171-176 —
-    * built-in, codegen-friendly), descendants = explode-invert-collect.
+  /** One source's score among an evidence group's rows: the first row of
+    * that source, as the reference pivot's `first(score)` took it. A missing
+    * source, a null score and a NaN score all read 0.0, as its
+    * `na.fill(0.0)` left them. Built from codegen'd array expressions (no
+    * lambda), so the projection stays inside the surrounding codegen stage.
     *
-    * diseases: (id, path_codes array<array<string>>).
-    * Output: (id, ancestors, descendants) — every disease is its own
-    * ancestor/descendant (inner join is safe, sc:181).
+    * rows: array<struct<datasource, score, …>>.
     */
-  def diseaseOntology(diseases: DataFrame): DataFrame = {
-    val withAnc = diseases
-      .select(col("id"), array_distinct(flatten(col("path_codes"))).as("ancestors"))
-      .where(size(col("ancestors")) > 0)
-    val desc = Graph.invertClosure(withAnc, "id", "ancestors")
-      .withColumnRenamed("ancestor", "id")
-    withAnc.join(desc, Seq("id"))
+  private def sourceScore(rows: Column, source: String): Column = {
+    val at = (array_position(rows.getField("datasource"), source) - 1).cast("int")
+    coalesce(nanvl(get(rows.getField("score"), at), lit(null)), lit(0.0)).as(source)
   }
 
-  /** Per-evidence source scores (sc:433-437): pivot datasource → one column
-    * per source, missing → 0. Explicit value list skips the distinct-values
-    * driver job the reference paid for.
+  /** Per-evidence source scores (sc:433-437): one column per source,
+    * missing → 0, one row per evs_id. The sources are an explicit list, so
+    * there is no distinct-values driver job as in the reference's pivot,
+    * and no pivot: one group by evs_id. `run` scores with
+    * `scoredEvidences` through the same `sourceScore` instead: joining
+    * these rows back to the evidences would read them a second time and
+    * add a shuffle.
     *
     * evidences: (evs_id, datasource, score). Output: (evs_id, <src>...).
     */
   def evidenceScores(evidences: DataFrame, datasources: Seq[String]): DataFrame =
     evidences
       .groupBy(col("evs_id"))
-      .pivot("datasource", datasources)
-      .agg(first(col("score")))
-      .na.fill(0.0)
+      .agg(collect_list(struct(col("datasource"), col("score"))).as("rows"))
+      .select(col("evs_id") +: datasources.map(sourceScore(col("rows"), _)): _*)
+
+  /** Every evidence row with its evs_id's source scores, in one pass: the
+    * rows that `evidenceScores` joined back on evs_id gave. The group
+    * carries its rows, so the evidences are read once and shuffled once,
+    * with no join. Rows sharing an evs_id (genetics ids repeat when
+    * predictions repeat) stay separate rows with the group's scores; a null
+    * evs_id is dropped, as that inner join dropped it. `collect_list` is the
+    * only aggregate: a declarative one beside it (`first`) would add
+    * generated projections to the aggregate.
+    *
+    * evidences: (evs_id, target_id, disease_id, datasource, score).
+    * Output: (evs_id, target_id, disease_id, <src>...).
+    */
+  def scoredEvidences(evidences: DataFrame, datasources: Seq[String]): DataFrame =
+    evidences
+      .where(col("evs_id").isNotNull)
+      .groupBy(col("evs_id"))
+      .agg(collect_list(struct(col("target_id"), col("disease_id"),
+        col("datasource"), col("score"))).as("rows"))
+      .select(col("evs_id") +: explode(col("rows")).as("row") +:
+        datasources.map(sourceScore(col("rows"), _)): _*)
+      .select(col("evs_id") +: col("row.target_id") +: col("row.disease_id") +:
+        datasources.map(col): _*)
 
   /** 1-hop reflexive propagation (sc:448-450, 462-464): each evidence row
     * fans out to the target's neighbourhood ∪ {itself}. neighbours side comes
-    * from networkLut.
+    * from networkLut. The LUT is target-sized and broadcast, the same
+    * subtree `run`'s target dimension joins, so AQE builds it once.
     */
   def propagate(evs: DataFrame, lut: DataFrame): DataFrame =
     evs
-      .join(lut.select(col("target_id"), col("neighbours")), Seq("target_id"))
+      .join(broadcast(lut.select(col("target_id"), col("neighbours"))),
+        Seq("target_id"))
       .withColumn("propagated_id",
         explode(array_union(col("neighbours"), array(col("target_id")))))
       .drop("neighbours")

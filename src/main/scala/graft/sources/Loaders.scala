@@ -2,19 +2,24 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 import graft.ops.Graph
 
 /** The reference's loader surface (sc:78-289) as pure projections over
   * schema'd inputs (graft.schema.Schemas): each function takes the RAW
   * loaded DataFrame and returns the normalized frame the pipeline stages
   * (graft.pipeline.DrugDisease) consume. All reshaping uses built-in
-  * higher-order functions — the reference's one UDF (flatten+toSet,
-  * sc:171-172) is array_distinct∘flatten here.
+  * functions — the reference's one UDF (flatten+toSet, sc:171-172) is
+  * array_distinct∘flatten here — and lambdas only where no codegen'd
+  * expression does the job: each lambda projection is one more class that
+  * Janino compiles per execute.
   */
 object Loaders {
 
   /** drugs (sc:93-107): normalized drug dimension; target_ids is the
-    * flattened MoA ensembl list (double transform, sc:409).
+    * flattened MoA ensembl list (sc:409). Nested field extraction gives the
+    * reference's double-transform list, null where it is null, and stays in
+    * codegen where a lambda would not.
     */
   def drugs(raw: DataFrame): DataFrame =
     raw.select(
@@ -23,22 +28,26 @@ object Loaders {
       col("max_clinical_trial_phase"),
       col("number_of_mechanisms_of_action"),
       col("indications.efo_id").as("indication_ids"),
-      array_distinct(flatten(transform(col("mechanisms_of_action"),
-        m => m.getField("target_components").getField("ensembl"))))
-        .as("target_ids"))
+      array_distinct(flatten(col("mechanisms_of_action.target_components"))
+        .getField("ensembl")).as("target_ids"))
 
   /** targets (sc:109-132): go reshaped to struct<code, term> (sc:121-126);
     * approved_symbol surfaces as target_name exactly as the reference
     * projects it (sc:112) — the decorated association sink carries it.
+    * The reshape zips the two extracted field arrays and renames by cast:
+    * the rows and type of the reference's per-element struct transform,
+    * codegen'd where the lambda would run interpreted.
     */
   def targets(raw: DataFrame): DataFrame =
     raw.select(
       col("id").as("target_id"),
       col("approved_symbol").as("target_name"),
       col("uniprot_accessions"),
-      transform(col("go"), g => struct(
-        g.getField("id").as("code"),
-        g.getField("value").getField("term").as("term"))).as("go_terms"))
+      arrays_zip(col("go.id"), col("go.value.term")).cast(goTerms).as("go_terms"))
+
+  private val goTerms = ArrayType(
+    new StructType().add("code", StringType).add("term", StringType),
+    containsNull = false)
 
   /** accession→id LUT (sc:56-62): explode multi-accession genes; the
     * dimension DrugDisease.networkLut broadcasts. The reference's
@@ -48,21 +57,37 @@ object Loaders {
     targets.select(explode(col("uniprot_accessions")).as("accession"),
       col("target_id").as("id"))
 
-  /** diseases (sc:159-188): short id from the URI tail (sc:175), ancestors
-    * flattened from path_codes, descendants by inversion (every disease is
-    * its own ancestor/descendant — inner joins stay safe, sc:181).
+  /** diseases (sc:159-188): short id from the URI tail (sc:175), then the
+    * ontology closure of `diseaseOntology`.
     */
-  def diseases(raw: DataFrame): DataFrame = {
-    val withAnc = raw.select(
+  def diseases(raw: DataFrame): DataFrame =
+    diseaseOntology(raw.select(
       substring_index(col("code"), "/", -1).as("disease_id"),
       col("label").as("disease_name"),
       col("therapeutic_codes").as("therapeutic_areas"),
-      array_distinct(flatten(col("path_codes"))).as("ancestors"))
+      col("path_codes")), "disease_id")
+
+  /** Disease ontology (sc:169-187): ancestors = flatten of path_codes
+    * (array_distinct replaces the reference's flatten+toSet UDF, sc:171-176 —
+    * built-in, codegen-friendly), descendants = explode-invert-collect.
+    * Every disease is its own ancestor/descendant, so the inner join is safe
+    * (sc:181).
+    *
+    * diseases: (`id`, path_codes array<array<string>>, …). Output: the input
+    * columns with path_codes replaced by ancestors, plus descendants; rows
+    * with no ancestor are dropped.
+    */
+  def diseaseOntology(diseases: DataFrame, id: String): DataFrame = {
+    val withAnc = diseases
+      .select(diseases.columns.toSeq.map {
+        case "path_codes" => array_distinct(flatten(col("path_codes"))).as("ancestors")
+        case c => col(c)
+      }: _*)
       .where(size(col("ancestors")) > 0)
     val desc = Graph.invertClosure(
-      withAnc.select(col("disease_id").as("id"), col("ancestors")), "id", "ancestors")
-      .withColumnRenamed("ancestor", "disease_id")
-    withAnc.join(desc, Seq("disease_id"))
+      withAnc.select(col(id).as("id"), col("ancestors")), "id", "ancestors")
+      .withColumnRenamed("ancestor", id)
+    withAnc.join(desc, Seq(id))
   }
 
   /** literature evidences (sc:222-235): source filter pushes to the scan. */

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -22,7 +23,8 @@ import org.apache.spark.sql.SparkSession
 object RunMetrics {
 
   /** Job count and task-metric totals across every job that ran inside
-    * `measure`.
+    * `measure`, plus the classes Janino compiled meanwhile
+    * (`codegenCompiles`: codegen cache misses, JVM-wide).
     */
   case class Snapshot(
       tasks: Long,
@@ -32,7 +34,8 @@ object RunMetrics {
       spillBytes: Long,
       inputRecords: Long,
       jobs: Long,
-      executorRunMs: Long) {
+      executorRunMs: Long,
+      codegenCompiles: Long) {
     /** Executor task time summed over every task (not wall-clock). */
     def taskSeconds: Double = executorRunMs / 1000.0
   }
@@ -62,9 +65,9 @@ object RunMetrics {
       }
     }
 
-    def snapshot: Snapshot = Snapshot(tasks.sum(), swBytes.sum(),
+    def snapshot(compiles: Long): Snapshot = Snapshot(tasks.sum(), swBytes.sum(),
       swRecords.sum(), srRecords.sum(), spill.sum(), input.sum(), jobs.sum(),
-      runMs.sum())
+      runMs.sum(), compiles)
   }
 
   /** Run `body`, return its result plus the fleet-wide task-metric totals
@@ -76,10 +79,12 @@ object RunMetrics {
     val sc = spark.sparkContext
     val fold = new Fold
     sc.addSparkListener(fold)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       val result = body
       sc.listenerBus.waitUntilEmpty()
-      (result, fold.snapshot)
+      (result, fold.snapshot(
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled))
     } finally sc.removeSparkListener(fold)
   }
 }

@@ -592,4 +592,43 @@ class PlanShapeSpec extends SparkSpec {
     assert(finals.forall(_.isInstanceOf[BoundedObjectHashAggregateExec]),
       assoc.queryExecution.executedPlan)
   }
+
+  test("pipeline: the decorated associations plan scans evidences, " +
+    "predictions and interactions once, targets at most twice") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val in = graft.pipeline.RunPipelineBinarySpec.writeWorld(spark)
+    val (assoc, _) = graft.pipeline.DrugDisease.run(
+      graft.RunPipeline.inputs(spark, in, whitelistPath = None))
+    try {
+      // materialize the cache: AQE's exchange reuse shows only in the
+      // final adaptive plans
+      assoc.write.mode("overwrite").format("noop").save()
+      // a reused exchange reads no input of its own
+      def scans(p: SparkPlan): Seq[String] = p match {
+        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case q: QueryStageExec => scans(q.plan)
+        case i: InMemoryTableScanExec => scans(i.relation.cachedPlan)
+        case _: ReusedExchangeExec => Nil
+        case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+        case o => o.children.flatMap(scans)
+      }
+      val plan = assoc.queryExecution.executedPlan
+      val counts = scans(plan).groupBy(identity).map { case (f, xs) => f -> xs.size }
+      // ceilings: the scans of the previous composition (pivot + join back,
+      // undirect + two unequal gene broadcasts), lowered where this one
+      // reads an input once
+      val ceiling = Map(
+        "evidences.json" -> 1, "predictions.parquet" -> 1,
+        "interactions.json" -> 1, "targets.json" -> 2, "studies.parquet" -> 1,
+        "drugs.json" -> 2, "diseases.json" -> 2, "faers_by_drug.json" -> 1,
+        "faers_by_target.json" -> 1, "aggregations.json" -> 1)
+      assert(counts.keySet == ceiling.keySet, counts)
+      ceiling.foreach { case (f, n) => assert(counts(f) <= n, s"$f: $counts\n$plan") }
+      Seq("evidences.json", "predictions.parquet", "interactions.json")
+        .foreach(f => assert(counts(f) == 1, s"$f: $counts"))
+    } finally assoc.unpersist()
+  }
 }

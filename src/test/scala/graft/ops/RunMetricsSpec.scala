@@ -39,6 +39,17 @@ class RunMetricsSpec extends SparkSpec {
     assert(m.taskSeconds >= 0.2, m)
   }
 
+  test("a projection never seen before compiles at least one class") {
+    // the literal is inlined into the generated code, so no earlier query
+    // in this JVM can have cached this class
+    val fresh = lit(System.nanoTime())
+    val (_, m) = RunMetrics.measure(spark) {
+      spark.range(0, 100).select((col("id") * fresh).as("x"))
+        .write.mode("overwrite").format("noop").save()
+    }
+    assert(m.codegenCompiles >= 1L, m)
+  }
+
   test("a groupBy shuffles at most one record per group per map partition") {
     // map-side partial aggregation: the exchange carries partial states,
     // never the input rows — 10k rows over 7 groups must shuffle far

@@ -28,7 +28,7 @@ class DrugDiseaseSpec extends SparkSpec {
       ("D1", Seq(Seq("D1"), Seq("D0", "D1"))),
       ("D0", Seq(Seq("D0")))
     ).toDF("id", "path_codes")
-    val ont = DrugDisease.diseaseOntology(diseases)
+    val ont = graft.sources.Loaders.diseaseOntology(diseases, "id")
       .as[(String, Seq[String], Seq[String])].collect()
       .map(r => r._1 -> ((r._2.toSet, r._3))).toMap
     assert(ont("D1") == ((Set("D1", "D0"), Seq("D1"))))
@@ -44,6 +44,91 @@ class DrugDiseaseSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(scores("e1") == ((0.5, 0.3)))
     assert(scores("e2") == ((0.2, 0.0)))
+  }
+
+  /** Per-evs_id scores joined back to the evidence rows on evs_id: the
+    * rows `scoredEvidences` must give.
+    */
+  private def scoresJoinedBack(evs: org.apache.spark.sql.DataFrame) =
+    evs.select(col("evs_id"), col("target_id"), col("disease_id"))
+      .join(DrugDisease.evidenceScores(
+        evs.select(col("evs_id"), col("datasource"), col("score")),
+        Seq("genetics", "europepmc")), Seq("evs_id"))
+
+  private def scoredRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("evs_id"), col("target_id"), col("disease_id"),
+      col("genetics"), col("europepmc"))
+      .as[(String, String, String, Double, Double)].collect().toSeq.sorted
+
+  test("scoredEvidences: rows sharing an evs_id stay separate rows with the " +
+    "same per-source scores") {
+    val evs = Seq(
+      ("g1", "T1", "D1", "genetics", 0.7),
+      ("g1", "T2", "D1", "genetics", 0.7),
+      ("e1", "T1", "D2", "europepmc", 0.4),
+      ("e1", "T1", "D2", "genetics", 0.2)
+    ).toDF("evs_id", "target_id", "disease_id", "datasource", "score")
+    val rows = scoredRows(
+      DrugDisease.scoredEvidences(evs, Seq("genetics", "europepmc")))
+    assert(rows == Seq(
+      ("e1", "T1", "D2", 0.2, 0.4), ("e1", "T1", "D2", 0.2, 0.4),
+      ("g1", "T1", "D1", 0.7, 0.0), ("g1", "T2", "D1", 0.7, 0.0)))
+    assert(rows == scoredRows(scoresJoinedBack(evs)))
+  }
+
+  test("scoredEvidences: a null evs_id drops its row; a null score and a " +
+    "missing source read 0.0") {
+    val evs = Seq[(String, String, String, String, java.lang.Double)](
+      (null, "T1", "D1", "genetics", 0.9),
+      ("e1", "T1", "D1", "europepmc", null),
+      ("e2", "T2", "D1", "other", 0.5)
+    ).toDF("evs_id", "target_id", "disease_id", "datasource", "score")
+    val rows = scoredRows(
+      DrugDisease.scoredEvidences(evs, Seq("genetics", "europepmc")))
+    assert(rows == Seq(("e1", "T1", "D1", 0.0, 0.0), ("e2", "T2", "D1", 0.0, 0.0)))
+    assert(rows == scoredRows(scoresJoinedBack(evs)))
+  }
+
+  /** The network LUT from Graph.undirect + two translation joins: the rows
+    * `networkLut` must give.
+    */
+  private def undirectedLut(edges: org.apache.spark.sql.DataFrame,
+                            genes: org.apache.spark.sql.DataFrame) = {
+    val und = graft.ops.Graph.undirect(edges)
+    val g = genes.select(col("accession"), col("id"))
+    val translated = und
+      .join(g, und("A") === g("accession"))
+      .select(col("id").as("A_id"), col("B"))
+      .join(g, col("B") === g("accession"))
+      .select(col("A_id"), col("id").as("B_id"))
+    graft.ops.Graph.adjacency(translated.toDF("src", "dst"))
+      .withColumnRenamed("src", "target_id")
+  }
+
+  private def lutRows(lut: org.apache.spark.sql.DataFrame) =
+    lut.select(col("target_id"), col("neighbours"), col("degree"))
+      .as[(String, Seq[String], Long)].collect().toSet
+
+  test("networkLut: a reciprocal duplicate edge gives one neighbour") {
+    val edges = Seq(("P1", "P2"), ("P2", "P1"), ("P1", "P2")).toDF("A", "B")
+    val genes = Seq(("P1", "G1"), ("P2", "G2")).toDF("accession", "id")
+    val lut = lutRows(DrugDisease.networkLut(edges, genes))
+    assert(lut == Set(("G1", Seq("G2"), 1L), ("G2", Seq("G1"), 1L)))
+    assert(lut == lutRows(undirectedLut(edges, genes)))
+  }
+
+  test("networkLut: a neighbour whose gene id is null leaves the LUT rows " +
+    "the undirect form left") {
+    // P2's gene has no id: G4's only neighbour vanishes (an empty row that
+    // still propagates to G4 itself) and the null id keeps its own row
+    val edges = Seq(("P1", "P2"), ("P1", "P3"), ("P4", "P2")).toDF("A", "B")
+    val genes = Seq[(String, String)](
+      ("P1", "G1"), ("P2", null), ("P3", "G3"), ("P4", "G4")
+    ).toDF("accession", "id")
+    val lut = lutRows(DrugDisease.networkLut(edges, genes))
+    assert(lut == Set(("G1", Seq("G3"), 1L), ("G3", Seq("G1"), 1L),
+      ("G4", Seq.empty[String], 0L), (null, Seq("G1", "G4"), 2L)))
+    assert(lut == lutRows(undirectedLut(edges, genes)))
   }
 
   test("propagate fans each evidence to neighbourhood plus self") {

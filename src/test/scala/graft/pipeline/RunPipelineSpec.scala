@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.{RunPipeline, SparkSpec}
 import graft.sources.Loaders
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RunMetrics
 import org.apache.spark.storage.StorageLevel
 
 /** Raw-input → loaders → full DrugDisease.run, both pipeline modes — the
@@ -163,5 +164,21 @@ class RunPipelineSpec extends SparkSpec {
     RunPipeline.execute(spark, in, s"$out/wl",
       whitelistPath = Some(s"$in/whitelist.json"))
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a warm execute stays under its job ceiling in both modes") {
+    // one job per query stage, so a second copy of any input branch or
+    // exchange adds its stages. Ceilings are the measured counts (the
+    // pivot + join-back composition ran 30 and 32).
+    val in = RunPipelineBinarySpec.writeWorld(spark)
+    val out = java.nio.file.Files.createTempDirectory("graft-out-jobs").toString
+    Seq(None -> 26L, Some(s"$in/whitelist.json") -> 28L).foreach {
+      case (wl, ceiling) =>
+        RunPipeline.execute(spark, in, s"$out/cold", wl)
+        val (_, m) = RunMetrics.measure(spark) {
+          RunPipeline.execute(spark, in, s"$out/warm", wl)
+        }
+        assert(m.jobs <= ceiling, s"whitelist=${wl.isDefined}: $m")
+    }
   }
 }
