@@ -20,12 +20,15 @@ import graft.ops.{Graph, Scoring}
   * each). Its shuffles are the evs_id group of the one-pass evidence
   * scoring (no pivot and no join back), the network regroup, the
   * association groupBy (bounded by top-K slice) and the bundle groupBys.
-  * Every dimension side is broadcast. Two exchanges are shared, and AQE
-  * reuses them only because both consumers plan identical subtrees: the
-  * gene broadcast of the two accession joins, and the network LUT that
-  * `propagate` and the target dimension join. Each extra branch costs its
-  * own scan, stages and generated classes, which Janino compiles again on
-  * every execute once a run needs more than Spark's 100-entry codegen cache.
+  * The decoration's dimension joins carry no broadcast hint: the drug
+  * bundles hold AE lists and the target dimension hub neighbour arrays, so
+  * they grow with the data, and AQE must stay free to sort-merge them.
+  * Two exchanges are shared, and AQE reuses them only because both
+  * consumers plan identical subtrees: the gene broadcast of the two
+  * accession joins, and the network LUT that `propagate` and the target
+  * dimension join. Each extra branch costs its own scan, stages and
+  * generated classes, which Janino compiles again on every execute once a
+  * run needs more than Spark's 100-entry codegen cache.
   */
 object DrugDisease {
 
@@ -95,14 +98,14 @@ object DrugDisease {
     // drug-bundle-per-disease, target dim ⟕ drug-bundle-per-target ⟕
     // network neighbourhoods. Bundle sides are left_outer exactly as the
     // reference; the dims themselves join the score frame INNER (sc:455-456,
-    // 468-469), so associations only materialize for known dim rows. Every
-    // side but the score frame is a dimension and broadcast, so the score
-    // frame is never shuffled or sorted for these joins.
+    // 468-469), so associations only materialize for known dim rows. Only
+    // the LUT side is hinted: the bundles and dims grow with the targets,
+    // diseases and AE lists, so AQE picks their join strategy.
     val dfD = in.diseases
-      .join(broadcast(drugsForDisease(in.drugs, in.aesByDrug, in.aggregations)),
+      .join(drugsForDisease(in.drugs, in.aesByDrug, in.aggregations),
         Seq("disease_id"), "left_outer")
     val dfT = in.targets
-      .join(broadcast(drugsForTarget(in.drugs, in.aesByTarget)),
+      .join(drugsForTarget(in.drugs, in.aesByTarget),
         Seq("target_id"), "left_outer")
       .join(broadcast(lut.select(col("target_id"), col("neighbours"))),
         Seq("target_id"), "left_outer")
@@ -122,8 +125,8 @@ object DrugDisease {
     // row set without its size(null) = -1 sentinel (see aeContainment).
     val associations = newDrugs(
       assocByDisease
-        .join(broadcast(dfT), Seq("target_id"))
-        .join(broadcast(dfD), Seq("disease_id")),
+        .join(dfT, Seq("target_id"))
+        .join(dfD, Seq("disease_id")),
       dropEmpty = !whitelistMode)
       .cache()
     // The JSON sink projection (sc:478-494): names, therapeutic areas, the
@@ -260,21 +263,26 @@ object DrugDisease {
     * predictions repeat) stay separate rows with the group's scores; a null
     * evs_id is dropped, as that inner join dropped it. `collect_list` is the
     * only aggregate: a declarative one beside it (`first`) would add
-    * generated projections to the aggregate.
+    * generated projections to the aggregate. The scores are taken once per
+    * group, below the explode: above it they would scan the group's rows
+    * once per row, O(n²) in the group size.
     *
     * evidences: (evs_id, target_id, disease_id, datasource, score).
     * Output: (evs_id, target_id, disease_id, <src>...).
     */
-  def scoredEvidences(evidences: DataFrame, datasources: Seq[String]): DataFrame =
+  def scoredEvidences(evidences: DataFrame, datasources: Seq[String]): DataFrame = {
+    val scores = datasources.map(col)
     evidences
       .where(col("evs_id").isNotNull)
       .groupBy(col("evs_id"))
       .agg(collect_list(struct(col("target_id"), col("disease_id"),
         col("datasource"), col("score"))).as("rows"))
-      .select(col("evs_id") +: explode(col("rows")).as("row") +:
+      .select(col("evs_id") +: col("rows") +:
         datasources.map(sourceScore(col("rows"), _)): _*)
+      .select(col("evs_id") +: explode(col("rows")).as("row") +: scores: _*)
       .select(col("evs_id") +: col("row.target_id") +: col("row.disease_id") +:
-        datasources.map(col): _*)
+        scores: _*)
+  }
 
   /** 1-hop reflexive propagation (sc:448-450, 462-464): each evidence row
     * fans out to the target's neighbourhood ∪ {itself}. neighbours side comes

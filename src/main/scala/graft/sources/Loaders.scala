@@ -65,7 +65,7 @@ object Loaders {
       substring_index(col("code"), "/", -1).as("disease_id"),
       col("label").as("disease_name"),
       col("therapeutic_codes").as("therapeutic_areas"),
-      col("path_codes")), "disease_id")
+      col("path_codes")))
 
   /** Disease ontology (sc:169-187): ancestors = flatten of path_codes
     * (array_distinct replaces the reference's flatten+toSet UDF, sc:171-176 —
@@ -73,21 +73,20 @@ object Loaders {
     * Every disease is its own ancestor/descendant, so the inner join is safe
     * (sc:181).
     *
-    * diseases: (`id`, path_codes array<array<string>>, …). Output: the input
-    * columns with path_codes replaced by ancestors, plus descendants; rows
-    * with no ancestor are dropped.
+    * diseases: (disease_id, path_codes array<array<string>>, …). Output:
+    * the input columns with path_codes replaced by ancestors, plus
+    * descendants; rows with no ancestor are dropped.
     */
-  def diseaseOntology(diseases: DataFrame, id: String): DataFrame = {
+  def diseaseOntology(diseases: DataFrame): DataFrame = {
     val withAnc = diseases
       .select(diseases.columns.toSeq.map {
         case "path_codes" => array_distinct(flatten(col("path_codes"))).as("ancestors")
         case c => col(c)
       }: _*)
       .where(size(col("ancestors")) > 0)
-    val desc = Graph.invertClosure(
-      withAnc.select(col(id).as("id"), col("ancestors")), "id", "ancestors")
-      .withColumnRenamed("ancestor", id)
-    withAnc.join(desc, Seq(id))
+    val desc = Graph.invertClosure(withAnc, "disease_id", "ancestors")
+      .withColumnRenamed("ancestor", "disease_id")
+    withAnc.join(desc, Seq("disease_id"))
   }
 
   /** literature evidences (sc:222-235): source filter pushes to the scan. */

@@ -27,8 +27,8 @@ class DrugDiseaseSpec extends SparkSpec {
     val diseases = Seq(
       ("D1", Seq(Seq("D1"), Seq("D0", "D1"))),
       ("D0", Seq(Seq("D0")))
-    ).toDF("id", "path_codes")
-    val ont = graft.sources.Loaders.diseaseOntology(diseases, "id")
+    ).toDF("disease_id", "path_codes")
+    val ont = graft.sources.Loaders.diseaseOntology(diseases)
       .as[(String, Seq[String], Seq[String])].collect()
       .map(r => r._1 -> ((r._2.toSet, r._3))).toMap
     assert(ont("D1") == ((Set("D1", "D0"), Seq("D1"))))

@@ -138,6 +138,24 @@ class RunPipelineSpec extends SparkSpec {
     assert(diseases == Set("D1")) // D2 dropped null-safely, not crashed
   }
 
+  test("disease AE profile skips a member drug without AE data and " +
+    "repeats of one AE list") {
+    // D1's members: d1 (nausea), d3 (no AE record -> null aes list) and d4
+    // (the same list as d1). The reference's unguarded flatten nulled the
+    // whole profile here; it stays {nausea}, so d2 scores as in open mode.
+    val base = inputs
+    def asD4(df: org.apache.spark.sql.DataFrame) =
+      df.union(df.where(col("drug_id") === "d1").withColumn("drug_id", lit("d4")))
+    val aggregations = Seq(("d1", "D1"), ("d3", "D1"), ("d4", "D1"))
+      .toDF("drug_id", "disease_id")
+    val (_, scored) = DrugDisease.run(base.copy(drugs = asD4(base.drugs),
+      aesByDrug = asD4(base.aesByDrug), aggregations = aggregations))
+    val rows = scored.select(col("target_id"), col("disease_aes_from_drugs"),
+      col("drug_hypothesis"), round(col("drug_hypothesis_disease_aes_score"), 6))
+      .as[(String, Seq[String], String, Double)].collect().toSet
+    assert(rows == Set(("T1", Seq("nausea"), "d2", 0.8), ("T2", Seq("nausea"), "d2", 0.8)))
+  }
+
   test("run caches exactly the decorated associations frame, which both " +
     "sinks read") {
     // suites share one session; start from an empty cache

@@ -27,22 +27,36 @@ class LoadersSpec extends SparkSpec {
         |"indications":[{"efo_id":"E1"},{"efo_id":"E2"}],
         |"mechanisms_of_action":[
         |  {"target_components":[{"ensembl":"G1"},{"ensembl":"G2"}]},
-        |  {"target_components":[{"ensembl":"G2"}]}]}""".stripMargin.replace("\n", "")))
-    val r = df.head()
-    assert(r.getAs[String]("drug_id") == "d1")
+        |  {"target_components":[{"ensembl":"G2"}]}]}""".stripMargin.replace("\n", ""),
+      // a null target_components list nulls the whole list, as the
+      // reference's flatten does; a null ensembl stays a null element
+      """{"id":"d2","mechanisms_of_action":[
+        |  {"target_components":null},
+        |  {"target_components":[{"ensembl":"G1"}]}]}""".stripMargin.replace("\n", ""),
+      """{"id":"d3","mechanisms_of_action":[
+        |  {"target_components":[{"ensembl":null},{"ensembl":"G3"}]}]}""".stripMargin.replace("\n", "")))
+    val byId = df.collect().map(r => r.getAs[String]("drug_id") -> r).toMap
+    val r = byId("d1")
     assert(r.getSeq[String](r.fieldIndex("indication_ids")) == Seq("E1", "E2"))
     assert(r.getSeq[String](r.fieldIndex("target_ids")) == Seq("G1", "G2"))
+    assert(byId("d2").isNullAt(byId("d2").fieldIndex("target_ids")))
+    assert(byId("d3").getSeq[String](byId("d3").fieldIndex("target_ids")) == Seq(null, "G3"))
   }
 
   test("targets + genesLut: go reshape and accession explode") {
     val df = Loaders.targets(jsonDf(Schemas.targets,
       """{"id":"T1","approved_symbol":"SYM","uniprot_accessions":["P1","P2"],
-        |"go":[{"id":"GO:1","value":{"term":"binding"}}]}""".stripMargin.replace("\n", "")))
-    val r = df.head()
-    assert(r.getAs[String]("target_id") == "T1")
-    val go = r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("go_terms"))
-    assert(go.map(g => (g.getAs[String]("code"), g.getAs[String]("term"))) ==
-      Seq(("GO:1", "binding")))
+        |"go":[{"id":"GO:1","value":{"term":"binding"}}]}""".stripMargin.replace("\n", ""),
+      // a null or partial go element keeps its slot as a struct of nulls;
+      // a null go list stays null
+      """{"id":"T2","go":[null,{"id":"GO:2"},{"value":{"term":"t3"}}]}""",
+      """{"id":"T3","go":null}"""))
+    val go = df.select(col("target_id"), col("go_terms")).collect()
+      .map(r => r.getString(0) -> Option(r.getSeq[org.apache.spark.sql.Row](1))
+        .map(_.map(g => (g.getAs[String]("code"), g.getAs[String]("term"))))).toMap
+    assert(go("T1") == Some(Seq(("GO:1", "binding"))))
+    assert(go("T2") == Some(Seq((null, null), ("GO:2", null), (null, "t3"))))
+    assert(go("T3") == None)
     val lut = Loaders.genesLut(df).as[(String, String)].collect().toSet
     assert(lut == Set(("P1", "T1"), ("P2", "T1")))
   }
