@@ -42,6 +42,14 @@ object RunPipeline {
     val studies = Sources.parquet(spark, s"$inDir/studies.parquet")
     val predictions = Sources.parquet(spark, s"$inDir/predictions.parquet")
 
+    // the input root's Hadoop FS, as every read uses: java.io.File reads a
+    // file:/hdfs: URI inDir as absent and silently skips the tissue filter
+    val exprPath = new org.apache.hadoop.fs.Path(s"$inDir/expression.json")
+    val hasExpression =
+      try exprPath.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(exprPath).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+
     val targets = Loaders.targets(targetsRaw)
     val evidences = Loaders.literatureEvidences(evidencesRaw)
       .unionByName(Loaders.geneticsEvidences(studies, predictions))
@@ -62,8 +70,7 @@ object RunPipeline {
       // 370); here its absence skips the tissue edge filter instead of
       // failing, so fixture worlds without expression data still run
       expression = Sources.optionalJson(spark,
-        Option(s"$inDir/expression.json")
-          .filter(p => new java.io.File(p).isFile),
+        Option.when(hasExpression)(exprPath.toString),
         Schemas.expression).map(Loaders.expression))
   }
 

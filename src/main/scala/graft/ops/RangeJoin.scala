@@ -69,10 +69,4 @@ object RangeJoin {
           floor(col(rLoCol) / bucketWidth).cast("long")))
       .drop("__bucket")
   }
-
-  /** Naive interval-overlap theta join — spec ground truth. */
-  def naiveOverlap(left: DataFrame, lLoCol: String, lHiCol: String,
-                   right: DataFrame, rLoCol: String, rHiCol: String): DataFrame =
-    left.join(right,
-      col(lLoCol) <= col(rHiCol) && col(rLoCol) <= col(lHiCol))
 }

@@ -455,25 +455,17 @@ object SimSearch {
           col("cid").cast("string"))), lit(kc)) === 0)
   }
 
-  /** Build-once (marker-gated) KnnStore over the fixture embeddings at
-    * the shared "beamstore" scratch root — serves both store-backed beam
-    * queries (single + batch); repeat runs in one JVM pay only the walk.
-    * Marker via the Hadoop FS for the root path, matching how the store
-    * itself is written/read — a java.io.File check was only consistent
-    * while the scratch root lived on the local filesystem (r14 ADVICE).
+  /** Build-once (marker-gated, LlmOps.storeOnce) KnnStore over the
+    * fixture embeddings at the shared "beamstore" scratch root — serves
+    * both store-backed beam queries (single + batch); repeat runs in one
+    * JVM pay only the walk.
     */
-  private def ensureBeamStore(s: SparkSession, d: String): String = {
-    val root = Relational.scratchPath(s, d, "beamstore")
-    val marker = new org.apache.hadoop.fs.Path(s"$root/_STORE_COMPLETE")
-    val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(marker)) {
+  private def ensureBeamStore(s: SparkSession, d: String): String =
+    LlmOps.storeOnce(s, d, "beamstore") { root =>
       val e = embeds(s, d)
       val cents = trainedCentroidFrame(e, e.count()).localCheckpoint(true)
       KnnStore.build(s, e, cents, root, 3)
-      fs.create(marker, true).close()
     }
-    root
-  }
 
   /** A probe-2 frame's probed cells, one row each: the primary and the
     * second cell, a null cell dropped (a null primary means both probed

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -11,6 +12,11 @@ import org.scalacheck.rng.Seed
   */
 class RangeJoinSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Naive interval-overlap theta join — the ground truth. */
+  private def naiveOverlap(left: DataFrame, lLoCol: String, lHiCol: String,
+      right: DataFrame, rLoCol: String, rHiCol: String): DataFrame =
+    left.join(right, col(lLoCol) <= col(rHiCol) && col(rLoCol) <= col(lHiCol))
 
   test("bucketed matches naive on a literal world incl. boundary points") {
     val points = Seq((1L, 0.0), (2L, 2.5), (3L, 5.0), (4L, 9.9)).toDF("pid", "p")
@@ -34,7 +40,7 @@ class RangeJoinSpec extends SparkSpec {
         .toDF("rid", "rlo", "rhi")
       val got = RangeJoin.bucketedOverlap(left, "llo", "lhi", right, "rlo", "rhi", w)
         .select(col("lid"), col("rid")).as[(Long, Long)].collect().toSeq
-      val want = RangeJoin.naiveOverlap(left, "llo", "lhi", right, "rlo", "rhi")
+      val want = naiveOverlap(left, "llo", "lhi", right, "rlo", "rhi")
         .select(col("lid"), col("rid")).as[(Long, Long)].collect().toSeq
       // exactly-once: compare as multisets, not sets — the ownership rule
       // must suppress duplicate emissions from shared buckets

@@ -122,6 +122,26 @@ class RunPipelineSpec extends SparkSpec {
     assert(sharedTargets == Set("T1", "T2"))
   }
 
+  test("execute finds expression.json through a file: URI input root") {
+    val in = RunPipelineBinarySpec.writeWorld(spark)
+    val out = java.nio.file.Files.createTempDirectory("graft-out-uri").toString
+    def sinks(dir: String) = (
+      spark.read.parquet(s"$dir/associations").collect().map(_.toString).sorted.toSeq,
+      spark.read.text(s"$dir/drug_disease").collect().map(_.getString(0)).sorted.toSeq)
+    RunPipeline.execute(spark, in, s"$out/none", whitelistPath = None)
+    // T1 active in liver only, T2 in brain only: the P1-P2 edge, the
+    // world's only one, is pruned, so no association survives
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/expression.json"),
+      Seq("""{"gene":"T1","tissues":[{"efo_code":"liver","rna":{"zscore":1.0},"protein":{"level":0.0}}]}""",
+        """{"gene":"T2","tissues":[{"efo_code":"brain","rna":{"zscore":1.0},"protein":{"level":0.0}}]}""")
+        .mkString("\n"))
+    RunPipeline.execute(spark, in, s"$out/plain", whitelistPath = None)
+    RunPipeline.execute(spark, s"file:$in", s"$out/uri", whitelistPath = None)
+    assert(sinks(s"$out/none")._1.nonEmpty)
+    assert(sinks(s"$out/plain")._1.isEmpty)
+    assert(sinks(s"$out/uri") == sinks(s"$out/plain"))
+  }
+
   test("whitelist mode: disease with no drugs survives to scoring without dividing by zero") {
     // D2 is whitelisted but has no aggregation row -> drugs_for_disease null
     // -> new_drugs null (kept: no size gate) -> explode drops it in scoring.
